@@ -17,7 +17,8 @@ import pyarrow.parquet as pa_pq
 import pytest
 from pyspark.sql import types as T
 
-from transit_data_pipeline_spark.catalog import TABLES, table
+from transit_data_pipeline_spark.catalog import TABLES, read_events_raw, table
+from transit_data_pipeline_spark.session import configure
 
 #: Raw parquet footer dtypes (pyarrow spelling) each loader supports.
 #: events.ts intentionally allows every encoding the driver has shipped.
@@ -111,3 +112,15 @@ def test_streaming_schema_matches_batch(spark, sf_dir):
     batch = table(spark, sf_dir, "events").drop("event_time")
     raw = _events_schema(spark, sf_dir)
     assert [f.name for f in raw.fields] == [f.name for f in batch.schema.fields]
+
+
+def test_events_read_leaves_session_conf_unchanged(spark, sf_dir):
+    """Reading events changes no session setting: the nanos-as-long
+    conf it needs is set once by configure() (session.RUNTIME_CONF),
+    not by every read."""
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    configure(spark)
+    before = spark.conf.getAll
+    read_events_raw(spark, sf_dir).schema
+    table(spark, sf_dir, "events").schema
+    assert spark.conf.getAll == before

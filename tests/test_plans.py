@@ -668,3 +668,29 @@ def test_two_phase_rank_windows_are_partition_parallel(spark, sf_dir, name):
             assert "Exchange SinglePartition" not in feeder, (
                 f"{name}: single-partition window:\n{line}\n{feeder}"
             )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "nation_trade_pagerank",
+        "hits_trade_graph",
+        "bfs_shortest_hops",
+        "kcore_trade_graph",
+    ],
+)
+def test_nation_graph_query_runs_as_one_plan(spark, sf_dir, name):
+    """The nation-graph iterations run inside one plan (the whole graph
+    collected into one row, the rounds a SQL higher-order-function
+    program), so the whole query — its table reads included — launches
+    at most 20 Spark jobs. A per-round driver loop launched 39-67."""
+    sc = spark.sparkContext
+    group = f"job-count:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        SPECS[name].fn(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20, f"{name}: {len(jobs)} jobs"

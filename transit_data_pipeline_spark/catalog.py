@@ -67,7 +67,7 @@ def table(
     if spread:
         dp = max(spark.sparkContext.defaultParallelism, 8)
         # Scale-adaptive spread width (r11, brief §2): one task per
-        # ~4 MB of on-disk input (env SPARK_GRAFT_SPREAD_TASK_BYTES),
+        # ~4 MB of on-disk input (SPREAD_TASK_BYTES),
         # floor 8, capped at cluster width. The old target was bare
         # defaultParallelism — a pure core-count constant that
         # splintered every CPU-heavy map over a sub-MB corpus into 32
@@ -86,9 +86,7 @@ def table(
 
 #: Per-task input quantum for `spread` repartitions (bytes of on-disk
 #: parquet; the raw text behind it is ~3-5x larger).
-SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", 4 * 1024 * 1024)
-)
+SPREAD_TASK_BYTES = 4 * 1024 * 1024
 
 
 def _source_bytes(sf_dir: str, name: str) -> int:
@@ -112,8 +110,9 @@ def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table exactly as stored. Driver fixtures have
     shipped ``ts`` as both TIMESTAMP(NANOS) (read as raw int64 nanos via
     ``nanosAsLong``) and plain ``timestamp[us]`` — this returns whichever
-    the footer declares; :func:`normalize_events` unifies them."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    the footer declares; :func:`normalize_events` unifies them. The
+    nanos read needs ``nanosAsLong``, which ``session.get_spark`` and
+    ``session.configure`` set (``session.RUNTIME_CONF``)."""
     return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
 

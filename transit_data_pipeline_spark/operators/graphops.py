@@ -1,27 +1,33 @@
-"""Iterative graph algorithms over the nation trade graph: bounded
-single-source BFS (frontier relaxation) and k-core decomposition
-(degree peeling).
+"""Graph algorithms over the nation trade graph: the PageRank and HITS
+cores (their queries are registered in pipelineops), bounded
+single-source BFS, k-core decomposition and Adamic-Adar link
+prediction.
 
-These complete the graph-audit family (`nation_trade_pagerank`,
-`hits_trade_graph`, `dedup_graph_triangles`, `dedup_components`) with
-the two classic distance/density primitives. Both run on a SPARSE
-"trade backbone": the weighted nation→nation edge list is thinned to
-each source's top-k partners (row_number per src — deterministic
-tiebreak on dst) and symmetrized, so hop distances and core membership
-are non-trivial (the full trade graph is near-complete and both
-answers would be degenerate).
+The trade graph has one node per nation and one edge per (supplier
+nation, customer nation) pair, weighted by line count. `trade_pairs`
+builds it in the family's only corpus-scale pass: lineitem ⋈ orders ⋈
+customer ⋈ supplier → groupBy(src, dst), a map-side-combinable
+aggregate. TPC-H fixes `nation` at 25 rows at every scale factor, so
+the graph never grows: at most 25 nodes and 625 edges, whatever the
+corpus size.
 
-Scale notes: the one corpus-scale pass is the weighted-edge build
-(lineitem ⋈ orders ⋈ customer ⋈ supplier → groupBy(src,dst)) — the
-same map-side-combinable aggregate PageRank pays. Everything after
-runs on the |nations|²-bounded edge list, localCheckpoint-ed so the
-fact-table lineage executes once, not once per iteration. The BFS
-iteration is the standard Pregel frontier shape (join frontier→edges
-keyed on src, min-aggregate on dst); the peel iteration is one
-degree aggregate + one semi-join per round. At web scale both remain
-join+aggregate per round with no driver-side data movement — the
-driver holds only loop counters (fixed bounds, so the plan is static
-and the DuckDB twin can unroll the same rounds).
+So each iteration runs inside one plan. The node list and the edge list
+are collected into ONE row; the fixed K rounds run there as a SQL
+higher-order-function program, ``aggregate(array_repeat(0, K), init,
+(s, _) -> next)``, where each state is a node → value map built by
+``transform(nodes, v -> …)``, in exact integer arithmetic; the final
+state is exploded back into one row per node. No round launches a
+Spark job: there is no driver loop and no lineage to cut, and the
+rounds are fixed, so the DuckDB twins unroll the same ones.
+
+BFS and k-core run on a SPARSE "trade backbone": each source's top-k
+partners (row_number per src, deterministic tiebreak on dst),
+symmetrized. The full trade graph is near-complete, so hop distances
+and core membership on it would be degenerate.
+
+Graphs that do grow with the corpus (near-duplicate document
+components, `dedup._min_label_components`) keep the Pregel shape: one
+join + aggregate per round, no driver-side data.
 
 Reference parity: the reference ships no graph operators; these are
 north-star extensions in the spirit of its network-style analyses
@@ -47,6 +53,146 @@ _CORE_TOPK = 3
 #: rounds; 6 is slack — the oracle unrolls the same 6).
 _CORE_K = 3
 _CORE_ROUNDS = 6
+
+
+def trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted trade graph (src, dst, w): w lines shipped from
+    supplier nation ``src`` to customer nation ``dst``."""
+    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    return (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
+        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _run(nodes: DataFrame, edges: DataFrame, program: str) -> DataFrame:
+    """Collect the graph into ONE row — ``nodes``, the sorted distinct
+    node ids, and ``edges``, every edge row as a struct — evaluate
+    ``program`` there (SQL returning one struct per node), and explode
+    its result back into rows."""
+    n = nodes.agg(F.array_sort(F.collect_set("node")).alias("nodes"))
+    e = edges.agg(F.collect_list(F.struct(*edges.columns)).alias("edges"))
+    return n.crossJoin(F.broadcast(e)).select(F.inline(F.expr(program)))
+
+
+def _rounds(k: int, init: str, step: str, out: str) -> str:
+    """SQL: ``k`` rounds of ``step`` from ``init`` (the state ``s`` is a
+    node → value map), then ``named_struct(out)`` for each node ``v`` of
+    the final state."""
+    return (
+        f"aggregate(array_repeat(0, {k}), {init}, (s, _) -> {step}, "
+        f"s -> transform(nodes, v -> named_struct({out})))"
+    )
+
+
+def _per_node(value: str) -> str:
+    """SQL: the node → value map with ``value`` evaluated at each node
+    ``v``."""
+    return f"map_from_arrays(nodes, transform(nodes, v -> {value}))"
+
+
+def _let(name: str, value: str, body: str) -> str:
+    """SQL: ``body`` with ``name`` bound to ``value``. SQL has no let, and
+    a subexpression repeated inside a lambda is evaluated at every use;
+    a one-element transform evaluates it once."""
+    return f"transform(array({value}), {name} -> {body})[0]"
+
+
+def pagerank_frame(
+    nodes: DataFrame, edges: DataFrame, iters: int, scale: int
+) -> DataFrame:
+    """Integer PageRank over an ARBITRARY directed weighted edge list —
+    the iteration core of ``nation_trade_pagerank``, factored out so
+    property tests can drive it with hypothesis-generated graphs.
+
+    `nodes`: one column ``node``; `edges`: ``src``/``dst``/``w``. Ranks
+    start at ``scale div n``; each of `iters` rounds gives node v
+    ``15·scale div 100n + 85·Σ_{u→v} (rank_u·w div out_w_u) div 100
+    + 85·dangling div 100n``, where dangling is the rank held by nodes
+    without out-edges. Returns (node, rank)."""
+    out_w = (
+        "map_from_entries(transform(array_distinct(transform(edges, e -> e.src)),"
+        " u -> struct(u, aggregate(filter(edges, e -> e.src = u), 0L,"
+        " (t, e) -> t + e.w))))"
+    )
+    contrib = (
+        "aggregate(filter(edges, e -> e.dst = v), 0L,"
+        " (t, e) -> t + coalesce((s[e.src] * e.w) div out_w[e.src], 0L))"
+    )
+    dangling = "aggregate(nodes, 0L, (t, u) -> t + if(out_w[u] IS NULL, s[u], 0L))"
+    rank = (
+        f"{15 * scale} div (100 * size(nodes)) + (85 * {contrib}) div 100"
+        f" + (85 * {dangling}) div (100 * size(nodes))"
+    )
+    return _run(
+        nodes,
+        edges,
+        _let(
+            "out_w",
+            out_w,
+            _rounds(
+                iters,
+                _per_node(f"{scale} div size(nodes)"),
+                _per_node(rank),
+                "'node', v, 'rank', s[v]",
+            ),
+        ),
+    )
+
+
+def hits_frame(
+    nodes: DataFrame, edges: DataFrame, iters: int, scale: int
+) -> DataFrame:
+    """Integer HITS over an ARBITRARY directed weighted edge list — the
+    iteration core of ``hits_trade_graph``, factored out for property
+    tests.
+
+    `nodes`: one column ``node``; `edges`: ``src``/``dst``/``w``.
+    Authorities start at ``scale div n``; each of `iters` rounds sets
+    hub_v = Σ_{v→u} w·auth_u, then auth_v = Σ_{u→v} w·hub_u, each
+    L1-renormalized as ``x·scale div total`` (0 when the total is 0).
+    Returns (node, hub, auth)."""
+
+    def half_step(scores: str, key: str, peer: str) -> str:
+        raw = (
+            f"transform(nodes, v -> aggregate(filter(edges, e -> e.{key} = v),"
+            f" 0L, (t, e) -> t + coalesce(e.w * {scores}[e.{peer}], 0L)))"
+        )
+        norm = f"CASE WHEN tot = 0 THEN 0L ELSE (x * {scale}) div tot END"
+        return _let(
+            "raw",
+            raw,
+            _let(
+                "tot",
+                "aggregate(raw, 0L, (t, y) -> t + y)",
+                f"map_from_arrays(nodes, transform(raw, x -> {norm}))",
+            ),
+        )
+
+    init = _per_node(f"{scale} div size(nodes)")
+    step = _let(
+        "h",
+        half_step("s.a", "src", "dst"),
+        f"named_struct('h', h, 'a', {half_step('h', 'dst', 'src')})",
+    )
+    return _run(
+        nodes,
+        edges,
+        _rounds(
+            iters,
+            f"named_struct('h', {init}, 'a', {init})",
+            step,
+            "'node', v, 'hub', s.h[v], 'auth', s.a[v]",
+        ),
+    )
 
 
 def _backbone_sql(k: int) -> str:
@@ -83,22 +229,9 @@ edges AS MATERIALIZED (
 
 
 def _backbone_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """Symmetric top-k trade backbone, materialized (localCheckpoint)
-    so the fact-scale lineage runs once across all iterations."""
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pairs = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    """Symmetric top-k trade backbone (src, dst) between distinct
+    nations."""
+    pairs = trade_pairs(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     wrk = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst"))
     topk = (
         pairs.select("src", "dst", F.row_number().over(wrk).alias("rk"))
@@ -106,10 +239,9 @@ def _backbone_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         .select("src", "dst")
     )
     return (
-        # One-pass symmetrization (explode of both orientations): the
-        # union-of-swapped spelling re-executed the fact-scale
-        # aggregate + window once per branch when the checkpoint
-        # materialized — two corpus passes for one 25-row frame (r10).
+        # One-pass symmetrization (explode of both orientations): a
+        # union of swapped copies runs the fact-scale aggregate + window
+        # once per branch.
         topk.select(
             F.explode(
                 F.array(
@@ -122,7 +254,6 @@ def _backbone_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         )
         .select("e.src", "e.dst")
         .distinct()
-        .localCheckpoint()
     )
 
 
@@ -137,79 +268,60 @@ def bfs_hops_frame(
     `nodes`: one int column ``node`` (every vertex, reachable or
     not); `edges`: ``src``/``dst``. Returns (node, hops) with hops
     NULL when the node is unreachable within `max_hops`."""
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node") == source, F.lit(0)).alias("hops"),
+    # Spark's least() and array_min() skip NULLs: an unreached node
+    # takes the best reached in-neighbor's hops + 1.
+    via = "array_min(transform(filter(edges, e -> e.dst = v), e -> s[e.src] + 1))"
+    return _run(
+        nodes,
+        edges,
+        _rounds(
+            max_hops,
+            _per_node(f"if(v = {source}, 0, NULL)"),
+            _per_node(f"least(s[v], {via})"),
+            "'node', v, 'hops', s[v]",
+        ),
     )
-    for it in range(max_hops):
-        cand = (
-            dist.filter(F.col("hops").isNotNull())
-            .join(F.broadcast(edges), dist["node"] == edges["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg((F.min("hops") + 1).alias("via"))
-        )
-        dist = (
-            dist.join(F.broadcast(cand), "node", "left")
-            .select(
-                "node",
-                # Explicit null-aware min — Spark's least() skips
-                # NULLs but engines disagree on that contract, so the
-                # CASE spells it out identically on both sides.
-                F.when(F.col("hops").isNull(), F.col("via"))
-                .when(F.col("via").isNull(), F.col("hops"))
-                .when(F.col("via") < F.col("hops"), F.col("via"))
-                .otherwise(F.col("hops"))
-                .alias("hops"),
-            )
-        )
-        # small frame; cutting lineage every OTHER round (and on the
-        # final round) keeps analysis/planning cost bounded — one
-        # plan doubling between cuts — while halving the
-        # materialization jobs (was per-round: measured 8.7 s with no
-        # cut at all, a chained-plan tax, not data; r10 halves the
-        # job count on top).
-        if it % 2 == 1 or it == max_hops - 1:
-            dist = dist.localCheckpoint()
-    return dist
+
+
+def kcore_frame(
+    nodes: DataFrame, edges: DataFrame, k: int, rounds: int
+) -> DataFrame:
+    """Degree peeling over an ARBITRARY symmetric edge list — the
+    iteration core of ``kcore_trade_graph``, factored out for property
+    tests (VERDICT r9 item 6).
+
+    Returns (node, deg0, deg, alive): the initial degree; the last
+    round's degree among the previous round's survivors (NULL for a
+    node peeled before it); and whether the node survives all
+    `rounds` peels. With rounds >= |nodes| the survivors are the exact
+    k-core fixpoint (each non-final round removes >= 1 node)."""
+    deg0 = "CAST(size(filter(edges, e -> e.src = v)) AS BIGINT)"
+    deg = f"CAST(size(filter(edges, e -> e.src = v AND s[e.dst] >= {k})) AS BIGINT)"
+    return _run(
+        nodes,
+        edges,
+        _rounds(
+            rounds,
+            _per_node(deg0),
+            _per_node(f"if(s[v] >= {k}, {deg}, NULL)"),
+            f"'node', v, 'deg0', {deg0}, 'deg', s[v],"
+            f" 'alive', coalesce(s[v] >= {k}, false)",
+        ),
+    )
 
 
 def kcore_peel(
     nodes: DataFrame, edges: DataFrame, k: int, rounds: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Degree peeling over an ARBITRARY symmetric edge list — the
-    iteration core of ``kcore_trade_graph``, factored out for
-    property tests (VERDICT r9 item 6).
-
-    Returns (deg0, alive, deg): initial degrees, the survivor set
-    after `rounds` peels, and the last round's survivor-restricted
-    degrees. With rounds >= |nodes| the survivor set is the exact
-    k-core fixpoint (each non-final round removes >= 1 node)."""
-    deg0 = (
-        nodes.join(F.broadcast(edges), nodes["node"] == edges["src"], "left")
-        .groupBy("node")
-        .agg(F.count(edges["dst"]).alias("deg"))
+    """:func:`kcore_frame` as (deg0, alive, deg): initial degrees, the
+    survivor set after `rounds` peels, and the last round's
+    survivor-restricted degrees."""
+    core = kcore_frame(nodes, edges, k, rounds)
+    return (
+        core.select("node", F.col("deg0").alias("deg")),
+        core.filter("alive").select("node"),
+        core.filter(F.col("deg").isNotNull()).select("node", "deg"),
     )
-    alive = deg0.filter(F.col("deg") >= k).select("node")
-    deg = deg0
-    for r in range(rounds):
-        # Fresh column names per round: `alive` feeds the round twice
-        # (as survivors and as the neighbor filter), so renamed
-        # projections keep the self-join unambiguous.
-        e = edges.select(
-            F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
-        )
-        nbr = alive.select(F.col("node").alias("nbr"))
-        deg = (
-            alive.join(F.broadcast(e), alive["node"] == F.col("e_src"), "left")
-            .join(F.broadcast(nbr), F.col("e_dst") == F.col("nbr"), "left")
-            .groupBy("node")
-            .agg(F.count("nbr").alias("deg"))
-        )
-        # small frame; lineage cut every other round (see bfs note).
-        if r % 2 == 1 or r == rounds - 1:
-            deg = deg.localCheckpoint()
-        alive = deg.filter(F.col("deg") >= k).select("node")
-    return deg0, alive, deg
 
 
 def _bfs_oracle() -> str:
@@ -236,15 +348,16 @@ FROM nation n LEFT JOIN dist d ON n.n_nationkey = d.node
     doc="Bounded single-source BFS over the thinned (top-2-partner) "
     "trade backbone: shortest hop count from nation 0 to every "
     "nation, computed by frontier relaxation — each of the "
-    f"{_BFS_HOPS} rounds is dist ⋈ edges (keyed on src) → "
-    "min-aggregate on dst → merge with the running distances, the "
-    "standard Pregel shape with no driver-side state. Distances "
-    "beyond the hop budget are NULL. Integer arithmetic throughout, "
-    "so every round is bitwise-reproducible under any partitioning; "
-    "the DuckDB twin is the engine-idiomatic recursive CTE carrying "
-    "the same hop bound. The corpus-scale work is the one weighted-"
-    "edge aggregate (shared shape with nation_trade_pagerank); the "
-    "iteration runs on the checkpointed |nations|²-bounded edges.",
+    f"{_BFS_HOPS} rounds gives every node the least of its distance "
+    "and its in-neighbors' distances + 1. Distances beyond the hop "
+    "budget are NULL. The backbone and the 25 nations are collected "
+    "into one row and the rounds run there as one SQL "
+    "higher-order-function program: one plan, no per-round job. That "
+    "holds at every scale factor, because TPC-H fixes nation at 25 "
+    "rows; the corpus-scale work is the one weighted-edge aggregate "
+    "(shared with nation_trade_pagerank). Integer arithmetic "
+    "throughout; the DuckDB twin is the engine-idiomatic recursive CTE "
+    "carrying the same hop bound.",
     oracle=_bfs_oracle(),
 )
 def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,46 +422,27 @@ LEFT JOIN d{_CORE_ROUNDS} df ON n.n_nationkey = df.node
     "backbone by degree peeling: each round drops every node whose "
     f"degree among survivors is < {_CORE_K}, fixed {_CORE_ROUNDS} "
     "rounds (25 nodes stabilize in ≤3; the DuckDB twin unrolls the "
-    "same rounds as chained CTEs). Per round the plan is one degree "
-    "aggregate over the survivor-restricted edge list + one filter — "
-    "at web scale each round is a semi-join + aggregate keyed on the "
-    "node id, the textbook distributed k-core. Emits every nation's "
-    "initial degree, core membership, and in-core degree; integer "
-    "counts throughout.",
+    "same rounds as chained CTEs). The backbone and the 25 nations "
+    "are collected into one row and the peel rounds run there "
+    "as one SQL higher-order-function program: one plan, no per-round "
+    "job, at every scale factor (TPC-H fixes nation at 25 rows). Emits "
+    "every nation's initial degree, core membership, and in-core "
+    "degree; integer counts throughout.",
     oracle=_kcore_oracle(),
 )
 def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _backbone_edges(spark, sf_dir, _CORE_TOPK)
     nation = table(spark, sf_dir, "nation")
     nodes = nation.select(F.col("n_nationkey").alias("node"))
-    deg0, alive, deg = kcore_peel(nodes, edges, k=_CORE_K, rounds=_CORE_ROUNDS)
-    return (
-        nation.join(
-            deg0.withColumnRenamed("deg", "deg_init"),
-            nation["n_nationkey"] == F.col("node"),
-        )
-        .drop("node")
-        .join(
-            alive.select(F.col("node").alias("core_node")),
-            nation["n_nationkey"] == F.col("core_node"),
-            "left",
-        )
-        .join(
-            deg.select(
-                F.col("node").alias("deg_node"), F.col("deg").alias("deg_final")
-            ),
-            nation["n_nationkey"] == F.col("deg_node"),
-            "left",
-        )
-        .select(
-            F.col("n_nationkey").alias("nationkey"),
-            "n_name",
-            F.col("deg_init").cast("bigint").alias("degree_initial"),
-            F.col("core_node").isNotNull().alias("in_core"),
-            F.when(F.col("core_node").isNotNull(), F.col("deg_final"))
-            .cast("bigint")
-            .alias("degree_in_core"),
-        )
+    core = kcore_frame(nodes, edges, k=_CORE_K, rounds=_CORE_ROUNDS)
+    return nation.join(
+        F.broadcast(core), nation["n_nationkey"] == core["node"]
+    ).select(
+        F.col("n_nationkey").alias("nationkey"),
+        "n_name",
+        F.col("deg0").alias("degree_initial"),
+        F.col("alive").alias("in_core"),
+        F.when(F.col("alive"), F.col("deg")).alias("degree_in_core"),
     )
 
 
@@ -453,7 +547,9 @@ FROM (
 """,
 )
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _backbone_edges(spark, sf_dir, _CORE_TOPK)
+    # adamic_adar_scored reads the backbone four times; the cut runs its
+    # corpus-scale build once.
+    edges = _backbone_edges(spark, sf_dir, _CORE_TOPK).localCheckpoint()
     scored = adamic_adar_scored(spark, edges)
     # Rank on the ROUNDED score: the raw double sum is order-dependent
     # across partition layouts, so mathematically-tied pairs could

@@ -994,87 +994,21 @@ FROM r{_PR_ITERS} r JOIN nation n ON r.node = n.n_nationkey
     "integer arithmetic on a 10^12 scale — float PageRank is "
     "partition-order-dependent; integer division makes every "
     "iteration bitwise-reproducible on any cluster. The heavy work "
-    "is the one-pass weighted-edge build from the fact table; the "
-    "iteration runs on the |nations|² edge list (broadcast-sized "
-    "here; at web scale each iteration is one join + one aggregate "
-    "keyed by dst — the standard distributed PageRank shape, no "
-    "driver-side state).",
+    "is the one-pass weighted-edge build from the fact table. Its "
+    "≤625 edges and the 25 nations are collected into one row and "
+    "the iterations run there as one SQL higher-order-function "
+    "program: one plan, no per-iteration job. That holds at every "
+    "scale factor, because TPC-H fixes nation at 25 rows.",
     oracle=_pagerank_oracle(),
 )
 def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # The weighted edge list is |nations|²-bounded (25 rows here) but
-    # its lineage is the full 3-join fact aggregation; each of the 5
-    # iterations references it and Catalyst does not share common
-    # subtrees across joins, so without truncation the edge build
-    # executes once per iteration. localCheckpoint materializes the
-    # tiny frame once (measured 5.9 s -> edge build 1x).
-    ew = edges.join(out_w, "src").localCheckpoint()
+    # Imported here: at module level graphops would register its
+    # queries ahead of this module's and reorder the registry.
+    from .graphops import pagerank_frame, trade_pairs
+
     nation = table(spark, sf_dir, "nation")
     nodes = nation.select(F.col("n_nationkey").alias("node"))
-    nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    base = nodes.crossJoin(F.broadcast(nn)).select(
-        "node",
-        F.expr(f"{15 * _PR_SCALE} div (100 * n)").alias("base"),
-        F.expr(f"{_PR_SCALE} div n").alias("rank"),
-    )
-    ranks = base.select("node", "rank")
-    srcs = ew.select("src").distinct()  # from the checkpointed frame
-    # (r11, measured-reverted: driving the per-round dangling mass and
-    # node count through observe()-on-checkpoint scalars — VERDICT r10
-    # item 5's mechanism — A/B'd 1.95 s → 2.2-2.7 s isolated and up to
-    # 7.3 s after heavy queries: Observation.get waits on the shared
-    # async listener bus, whose backlog from large-plan
-    # SQLExecutionStart events exceeds the cost of the tiny broadcast-
-    # subquery jobs it replaces. The subquery spelling stays.)
-    for _ in range(_PR_ITERS):
-        contrib = (
-            ranks.join(F.broadcast(ew), ranks["node"] == ew["src"])
-            .groupBy("dst")
-            .agg(F.expr("cast(sum((rank * w) div out_w) as bigint)").alias("sc"))
-        )
-        # Dangling mass (nodes without out-edges) is redistributed
-        # uniformly, damped — conserves total mass up to truncation.
-        dang = (
-            ranks.join(F.broadcast(srcs), ranks["node"] == srcs["src"], "left_anti")
-            .agg(F.expr("cast(coalesce(sum(rank), 0L) as bigint)").alias("dm"))
-        )
-        ranks = (
-            base.join(contrib, base["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                (
-                    F.col("base")
-                    + F.expr("(85 * coalesce(sc, 0L)) div 100")
-                    + F.expr("(85 * dm) div (100 * n)")
-                ).alias("rank"),
-            )
-            # Per-round lineage cut (r10): `ranks` feeds the NEXT
-            # round twice (contrib join + dangling-mass aggregate), so
-            # without truncation the logical plan doubles per round —
-            # 2^5 duplicated subtrees by round 5, each re-executing
-            # its broadcast subqueries (measured ~1 s at sf0.1; the
-            # no-cut spelling is unboundedly worse at depth — the same
-            # shape costs 30x in hits_trade_graph). The frame is
-            # |nations| rows, so the per-round materialization is
-            # constant-size at any corpus scale (guide §1.2/§5).
-            .localCheckpoint()
-        )
+    ranks = pagerank_frame(nodes, trade_pairs(spark, sf_dir), _PR_ITERS, _PR_SCALE)
     return ranks.join(
         F.broadcast(nation), ranks["node"] == nation["n_nationkey"]
     ).select(
@@ -1660,91 +1594,28 @@ JOIN nation n ON h.node = n.n_nationkey
     "arithmetic, L1-normalized to a 10^6 scale each half-step — "
     "float HITS is partition-order-dependent; integer division makes "
     "every iteration bitwise-reproducible on any cluster. The heavy "
-    "work is the one-pass weighted-edge build (localCheckpoint'd so "
-    "the 8 iteration joins reuse the 25-row frame, same rationale as "
-    "pagerank); each iteration is one join + one aggregate keyed by "
-    "the opposite endpoint — the standard distributed HITS shape.",
+    "work is the one-pass weighted-edge build (shared with "
+    "pagerank). Its ≤625 edges and the 25 nations are collected into "
+    "one row and the 8 half-steps run there as one SQL "
+    "higher-order-function program: one plan, no per-step job, at "
+    "every scale factor (TPC-H fixes nation at 25 rows).",
     oracle=_hits_oracle(),
 )
 def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint()  # 8 iteration joins reuse the tiny frame
-    )
+    from .graphops import hits_frame, trade_pairs
+
     nation = table(spark, sf_dir, "nation")
     nodes = nation.select(F.col("n_nationkey").alias("node"))
-    nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    auth = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", F.expr(f"{_HITS_SCALE} div n").alias("score")
-    )
-
-    def half_step(scores: DataFrame, edge_key: str, score_key: str) -> DataFrame:
-        """One HITS half-step: sum w·score over edges joined on
-        ``score_key``, grouped by ``edge_key``, then L1-renormalize."""
-        raw = (
-            nodes.join(
-                F.broadcast(edges), nodes["node"] == edges[edge_key], "left"
-            )
-            .join(
-                F.broadcast(scores.withColumnRenamed("node", "peer")),
-                F.col(score_key) == F.col("peer"),
-                "left",
-            )
-            .groupBy("node")
-            .agg(
-                F.expr("cast(coalesce(sum(w * score), 0L) as bigint)").alias(
-                    "raw"
-                )
-            )
-        )
-        # The normalization references `raw` twice (values + total), so
-        # without truncation each half-step DOUBLES the logical plan —
-        # 2^8 copies after 4 iterations stalls analysis. The frame is
-        # |nations| rows; localCheckpoint keeps every half-step O(1).
-        # (r11, measured-reverted: folding the L1 total in as an
-        # observe()-on-checkpoint scalar — VERDICT r10 item 5 — A/B'd
-        # 2.78 s → 3.58 s: Observation.get stalls on the shared async
-        # listener bus behind large-plan SQL events, costing more than
-        # the per-half-step broadcast-subquery job it removes.)
-        raw = raw.localCheckpoint()
-        tot = raw.agg(F.sum("raw").alias("tot"))
-        return raw.crossJoin(F.broadcast(tot)).select(
-            "node",
-            F.when(F.col("tot") == 0, F.lit(0).cast("long"))
-            .otherwise(F.expr(f"(raw * {_HITS_SCALE}) div tot"))
-            .alias("score"),
-        )
-
-    hub = auth  # placeholder; assigned in the first half-step below
-    for _ in range(_HITS_ITERS):
-        hub = half_step(auth, "src", "dst")
-        auth = half_step(hub, "dst", "src")
-    return (
-        hub.withColumnRenamed("score", "h")
-        .join(auth.withColumnRenamed("score", "a"), "node")
-        .join(F.broadcast(nation), F.col("node") == nation["n_nationkey"])
-        .select(
-            F.col("node").alias("nationkey"),
-            "n_name",
-            F.col("h").cast("bigint").alias("hub_int"),
-            F.col("a").cast("bigint").alias("auth_int"),
-            (F.col("h").cast("double") / F.lit(float(_HITS_SCALE))).alias(
-                "hub_share"
-            ),
-            (F.col("a").cast("double") / F.lit(float(_HITS_SCALE))).alias(
-                "auth_share"
-            ),
-        )
+    scores = hits_frame(nodes, trade_pairs(spark, sf_dir), _HITS_ITERS, _HITS_SCALE)
+    return scores.join(
+        F.broadcast(nation), scores["node"] == nation["n_nationkey"]
+    ).select(
+        F.col("node").alias("nationkey"),
+        "n_name",
+        F.col("hub").cast("bigint").alias("hub_int"),
+        F.col("auth").cast("bigint").alias("auth_int"),
+        (F.col("hub").cast("double") / F.lit(float(_HITS_SCALE))).alias("hub_share"),
+        (F.col("auth").cast("double") / F.lit(float(_HITS_SCALE))).alias("auth_share"),
     )
 
 

@@ -27,20 +27,20 @@ RUNTIME_CONF = {
     # (VERDICT r10 item 1; guide §2.2 "fewer, larger reduce
     # partitions"). Scale-adaptive by construction: partition count is
     # derived from shuffle bytes / advisory size at any scale, capped
-    # above by spark.sql.shuffle.partitions. Advisory size is
-    # env-tunable; 64m (Spark's default) suits the local bench, 256m
-    # is the guide-§9 production setting for big clusters.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
-        "SPARK_GRAFT_PARALLELISM_FIRST", "false"
-    ),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION", "64m"
-    ),
+    # above by spark.sql.shuffle.partitions. The 64m advisory size
+    # (Spark's default) suits the local bench; 256m is the guide-§9
+    # production setting for big clusters.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Exact ANSI-ish semantics are not required; reference relies on
     # permissive casts (SURVEY §2 P9).
     "spark.sql.ansi.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Read the events fixture's TIMESTAMP(NANOS) `ts` as raw int64
+    # nanos (catalog.normalize_events); without it the read throws
+    # PARQUET_TYPE_ILLEGAL.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
