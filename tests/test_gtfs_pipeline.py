@@ -163,3 +163,109 @@ def test_dashboard_queries(spark, pipeline):
 
     # narrow range filters rows out
     assert dash.kpi_metrics(ev, lo, lo).first().total_delays <= kpi.total_delays
+
+
+# ---- materialization boundaries of the nightly refresh ---------------
+
+
+def _expected_counts(frames) -> dict[str, int]:
+    """Operational row counts computed from the generated frames: the
+    cleanse, FK joins and first-wins dedup of `build_operational`."""
+    stops = frames["stops"].dropna(subset=["stop_lat", "stop_lon"])
+    routes = frames["routes"]
+    trips = frames["trips"][frames["trips"]["route_id"].isin(routes["route_id"])]
+    st = frames["stop_times"]
+    st = st[
+        st["arrival_time"].astype(str).str.fullmatch(r"\d+:[0-5]\d:[0-5]\d")
+        & st["trip_id"].isin(trips["trip_id"])
+        & st["stop_id"].isin(stops["stop_id"])
+    ]
+    ev = frames["delay_events"]
+    ev = ev[ev["trip_id"].isin(trips["trip_id"]) & ev["stop_id"].isin(stops["stop_id"])]
+    return {
+        "stops": stops["stop_id"].nunique(),
+        "routes": routes["route_id"].nunique(),
+        "trips": trips["trip_id"].nunique(),
+        "stop_times": len(st.drop_duplicates(["trip_id", "stop_sequence"])),
+        "delay_events": len(ev),
+    }
+
+
+MATERIALIZED = ("stops", "routes", "trips", "stop_times", "delay_events")
+
+
+def _counts(op) -> dict[str, int]:
+    return {name: op[name].count() for name in MATERIALIZED}
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def refresh(spark, pipeline, tmp_path_factory):
+    """One nightly model refresh (CSV → operational → warehouse →
+    features → model, evaluated and saved), started from an empty
+    CacheManager so that what it leaves there is its own."""
+    from transit_data_pipeline_spark.gtfs import features, ingest, ml, warehouse
+
+    staging = pipeline[0]
+    spark.catalog.clearCache()
+    op = ingest.build_operational(staging)
+    ingest.quality_audits(staging).collect()
+    warehouse.build_warehouse(op)["fact_delay_events"].count()
+    as_of = op["delay_events"].agg(
+        F.date_format(F.max(F.to_date("actual_arrival")), "yyyy-MM-dd")
+    ).first()[0]
+    feats = features.build_features(op, as_of)
+    train_df, test_df = features.train_test_views(feats)
+    model = ml.train(train_df, max_depth=3, max_iter=3)
+    sc = spark.sparkContext
+    group = "gtfs-refresh:evaluate"
+    sc.setJobGroup(group, group)
+    try:
+        ml.evaluate(model, test_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    eval_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    ml.save_model(model, str(tmp_path_factory.mktemp("model")), trained_at=as_of)
+    return dict(staging=staging, op=op, feats=feats, eval_jobs=eval_jobs)
+
+
+def test_operational_and_feature_tables_read_no_csv(refresh):
+    """The five derived operational tables and the feature table are
+    materialized leaves: their optimized plans scan no CSV."""
+    assert " csv" in _optimized_plan(refresh["staging"]["stops"])  # the probe sees scans
+    for name in MATERIALIZED:
+        assert " csv" not in _optimized_plan(refresh["op"][name]), name
+    assert " csv" not in _optimized_plan(refresh["feats"])
+
+
+def test_refresh_leaves_cache_manager_empty(spark, refresh):
+    """The pins are localCheckpoints, not persist(): nothing registers
+    in the session CacheManager, so a second refresh over the same CSV
+    computes its own tables."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_evaluate_is_one_pass(refresh):
+    assert 0 < refresh["eval_jobs"] <= 2, refresh["eval_jobs"]
+
+
+def test_operational_counts_per_csv_dir(spark, fixtures, tmp_path):
+    """Two build_operational calls over two CSV dirs in one session each
+    return their own dir's counts, also after the other was built."""
+    from transit_data_pipeline_spark.gtfs import ingest, synth
+
+    dir_a, frames_a = fixtures
+    dir_b = str(tmp_path / "gtfs_b")
+    frames_b = synth.generate(
+        dir_b, seed=7, n_routes=4, trips_per_route=3, n_stops=30, n_days=7
+    )
+    op_a = ingest.build_operational(ingest.read_staging(spark, dir_a))
+    op_b = ingest.build_operational(ingest.read_staging(spark, dir_b))
+    expected_a, expected_b = _expected_counts(frames_a), _expected_counts(frames_b)
+    assert all(expected_a[t] != expected_b[t] for t in MATERIALIZED)
+    assert _counts(op_b) == expected_b
+    assert _counts(op_a) == expected_a

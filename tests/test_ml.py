@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +19,7 @@ def feature_frames(spark, tmp_path_factory):
     as_of = op["delay_events"].agg(
         F.date_format(F.max(F.to_date("actual_arrival")), "yyyy-MM-dd")
     ).first()[0]
-    feats = features.build_features(op, as_of).cache()
+    feats = features.build_features(op, as_of)  # returned materialized
     return op, feats
 
 
@@ -246,3 +248,95 @@ def test_train_cv_literal_grid(feature_frames):
     assert bp["max_depth"] in (2, 3) and bp["min_instances_per_node"] in (1, 3)
     metrics = ml.evaluate(model, test_df)
     assert metrics["rmse"] > 0
+
+
+# ---- one-pass evaluate vs the evaluator path -------------------------
+
+
+def _five_pass(preds) -> dict:
+    """The evaluator path: three RegressionEvaluators and two
+    tolerance_accuracy calls, one Spark action each."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    from transit_data_pipeline_spark.gtfs import ml
+
+    out = {
+        m: RegressionEvaluator(
+            labelCol=ml.LABEL, predictionCol="prediction", metricName=m
+        ).evaluate(preds)
+        for m in ("rmse", "mae", "r2")
+    }
+    out["acc_5min"] = ml.tolerance_accuracy(preds, 5.0)
+    out["acc_10min"] = ml.tolerance_accuracy(preds, 10.0)
+    return out
+
+
+def _same(a: float, b: float, rel: float = 1e-9) -> bool:
+    if math.isnan(a) or math.isinf(a):
+        return math.isnan(b) if math.isnan(a) else a == b
+    return abs(a - b) <= rel * max(abs(a), abs(b), 1e-300)
+
+
+def _assert_parity(got: dict, want: dict) -> None:
+    assert set(got) == set(want)
+    for k in want:
+        assert _same(got[k], want[k]), (k, got[k], want[k])
+
+
+@pytest.fixture(scope="module")
+def scored(feature_frames):
+    from transit_data_pipeline_spark.gtfs import ml
+    from transit_data_pipeline_spark.gtfs.features import train_test_views
+
+    _, feats = feature_frames
+    train_df, test_df = train_test_views(feats)
+    return ml.train(train_df, max_depth=3, max_iter=3), test_df
+
+
+def _preds(model, test_df):
+    from transit_data_pipeline_spark.gtfs import ml
+
+    return model.transform(test_df.na.fill(0, subset=list(ml.NUMERIC)))
+
+
+def test_evaluate_matches_evaluator_path(scored):
+    from transit_data_pipeline_spark.gtfs import ml
+
+    model, test_df = scored
+    _assert_parity(ml.evaluate(model, test_df), _five_pass(_preds(model, test_df)))
+
+
+def test_evaluate_constant_label(scored):
+    """Zero label variance: r2 = 1 − Σerr²/0 is −inf for a model that
+    misses, NaN for an exact predictor — never a ZeroDivisionError."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.feature import SQLTransformer
+
+    from transit_data_pipeline_spark.gtfs import ml
+
+    model, test_df = scored
+    const = test_df.withColumn(ml.LABEL, F.lit(7))
+    got = ml.evaluate(model, const)
+    _assert_parity(got, _five_pass(_preds(model, const)))
+    assert got["r2"] == float("-inf")
+
+    exact = PipelineModel(
+        [SQLTransformer(statement=f"SELECT *, CAST({ml.LABEL} AS DOUBLE) AS prediction FROM __THIS__")]
+    )
+    got = ml.evaluate(exact, const)
+    _assert_parity(got, _five_pass(_preds(exact, const)))
+    assert math.isnan(got["r2"]) and got["rmse"] == 0.0 and got["acc_5min"] == 1.0
+
+
+def test_evaluate_empty_split_raises_like_evaluator(scored):
+    from pyspark.errors import IllegalArgumentException
+
+    from transit_data_pipeline_spark.gtfs import ml
+
+    model, test_df = scored
+    empty = test_df.limit(0)
+    with pytest.raises(IllegalArgumentException) as want:
+        _five_pass(_preds(model, empty))
+    with pytest.raises(IllegalArgumentException) as got:
+        ml.evaluate(model, empty)
+    assert str(got.value) == str(want.value)

@@ -8,7 +8,9 @@ can `broadcast()` them (SURVEY §4: "broadcast the six dims").
 
 from __future__ import annotations
 
+import functools
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,10 +91,13 @@ def table(
 SPREAD_TASK_BYTES = 4 * 1024 * 1024
 
 
+@functools.lru_cache(maxsize=None)
 def _source_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one table (file or directory of part files).
-    Falls back to a huge value (=> spread to full cluster width) when
-    the path is not os-stat-able (e.g. a remote filesystem URI)."""
+    """On-disk bytes of one table (file or directory of part files),
+    walked once per table path per process. Falls back to a huge value
+    (=> spread to full cluster width) when the path is not os-stat-able
+    (e.g. a remote filesystem URI), and warns, once per path, that the
+    width was not sized by input."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
@@ -103,6 +108,12 @@ def _source_bytes(sf_dir: str, name: str) -> int:
             )
         return os.path.getsize(path)
     except OSError:
+        warnings.warn(
+            f"cannot stat {path!r}; spread=True repartitions it to full "
+            "cluster width instead of one task per SPREAD_TASK_BYTES",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return 1 << 60
 
 

@@ -1,5 +1,6 @@
 """GTFS ingest: CSV → staging → cleansed operational tables
-(ref `sql/load_gtfs_data.sql`), all declarative DataFrame plans.
+(ref `sql/load_gtfs_data.sql`). Staging is a lazy CSV scan; the derived
+operational tables are materialized once (see :func:`build_operational`).
 
 The plpgsql time parser (`create_schema.sql:199-221`) becomes a pure
 column expression — stays inside whole-stage codegen, no UDF. Upsert
@@ -15,6 +16,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._util import _pin
 from . import schemas as S
 
 
@@ -91,20 +93,35 @@ def _dedup_first(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
 
 def build_operational(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """staging → operational: cleansing, defaults, FK-validation joins,
-    time parsing (ref `load_gtfs_data.sql:119-239`)."""
+    time parsing (ref `load_gtfs_data.sql:119-239`).
+
+    The first of the nightly refresh's two materialization boundaries
+    (the second is ``features.build_features``). The reference
+    INSERTs these tables and every later step reads the tables; here
+    the five derived ones (stops, routes, trips, stop_times,
+    delay_events) come back pinned by an eager ``localCheckpoint``
+    (``operators._util._pin``), so the warehouse, the feature build and
+    every later action start from these leaves instead of re-reading
+    the CSV and re-running the dedup windows and FK joins. Each table
+    is pinned before the tables built from it. ``localCheckpoint``,
+    not ``persist``: a persisted plan is keyed by its canonical form in
+    the CacheManager, so a second refresh over the same CSV in one
+    session would silently reuse the first refresh's blocks.
+    ``calendar`` and ``weather`` stay lazy: each is a plain projection
+    of its CSV scan, with no dedup or join to save."""
     stops = (
         staging["stops"]
         .filter(F.col("stop_lat").isNotNull() & F.col("stop_lon").isNotNull())
         .withColumn("wheelchair_boarding", F.coalesce("wheelchair_boarding", F.lit(0)))
     )
-    stops = _dedup_first(stops, ["stop_id"], ["stop_name"])
+    stops = _pin(_dedup_first(stops, ["stop_id"], ["stop_name"]))
 
     routes = (
         staging["routes"]
         .withColumn("route_color", F.coalesce("route_color", F.lit("FFFFFF")))
         .withColumn("route_text_color", F.coalesce("route_text_color", F.lit("000000")))
     )
-    routes = _dedup_first(routes, ["route_id"], ["route_short_name"])
+    routes = _pin(_dedup_first(routes, ["route_id"], ["route_short_name"]))
 
     # FK-validation inner join drops orphan trips (ref :185)
     trips = (
@@ -112,7 +129,7 @@ def build_operational(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
         .join(routes.select("route_id"), "route_id")
         .withColumn("direction_id", F.coalesce("direction_id", F.lit(0)))
     )
-    trips = _dedup_first(trips, ["trip_id"], ["route_id"])
+    trips = _pin(_dedup_first(trips, ["trip_id"], ["route_id"]))
 
     stop_times = (
         staging["stop_times"]
@@ -124,13 +141,15 @@ def build_operational(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
         .withColumn("timepoint", F.coalesce("timepoint", F.lit(1)))
         .drop("arrival_time", "departure_time")
     )
-    stop_times = _dedup_first(stop_times, ["trip_id", "stop_sequence"], ["stop_id"])
+    stop_times = _pin(
+        _dedup_first(stop_times, ["trip_id", "stop_sequence"], ["stop_id"])
+    )
 
     calendar = staging["calendar"]
     for d in ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"):
         calendar = calendar.withColumn(d, F.col(d).cast("boolean"))
 
-    delay_events = (
+    delay_events = _pin(
         staging["delay_events"]
         .join(trips.select("trip_id"), "trip_id")
         .join(stops.select("stop_id"), "stop_id")

@@ -10,6 +10,7 @@ and Arrow for any Pandas-UDF exchange.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -44,6 +45,39 @@ RUNTIME_CONF = {
 }
 
 
+#: Upper bound on the static ``spark.sql.event.truncate.length``: the
+#: longest plan string a listener-bus event may carry (see get_spark).
+EVENT_TRUNCATE_LENGTH = 2000
+
+
+def events_bounded(spark: SparkSession) -> bool:
+    """Whether the session caps listener-bus plan strings at
+    ``EVENT_TRUNCATE_LENGTH`` chars. The conf is static: a session
+    built without it keeps the unbounded default for its lifetime."""
+    value = spark.conf.get("spark.sql.event.truncate.length", None)
+    try:
+        return value is not None and int(value) <= EVENT_TRUNCATE_LENGTH
+    except ValueError:
+        return False
+
+
+def _warn_if_unbounded(spark: SparkSession) -> None:
+    """Warn, once per session, when ``spark`` lacks the bounded conf."""
+    if getattr(spark, "_tdps_events_checked", False):
+        return
+    spark._tdps_events_checked = True
+    if events_bounded(spark):
+        return
+    warnings.warn(
+        "spark.sql.event.truncate.length is not set to at most "
+        f"{EVENT_TRUNCATE_LENGTH} on this session; it is a static conf, so "
+        "iterative queries may post megabyte plan strings to the listener "
+        "bus and stall every wait on it. Set it when building the session.",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def get_spark(app_name: str = "transit_data_pipeline_spark") -> SparkSession:
     """Return the active session or build a local one.
 
@@ -71,26 +105,32 @@ def get_spark(app_name: str = "transit_data_pipeline_spark") -> SparkSession:
         # behind (r11; guide §5 "the driver should do almost no data
         # work"). Purely driver-side bookkeeping; no effect on plans,
         # results, or the UI-less status store's correctness.
-        .config("spark.sql.event.truncate.length", "2000")
+        .config("spark.sql.event.truncate.length", str(EVENT_TRUNCATE_LENGTH))
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
+    # getOrCreate may hand back a session that already existed, whose
+    # static confs ours could not override.
+    _warn_if_unbounded(spark)
     return spark
 
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session and
     ship this package to Python workers (Pandas-UDF closures reference
-    it by module name; executors can't import it otherwise)."""
+    it by module name; executors can't import it otherwise). Warns once
+    if the session lacks the bounded ``spark.sql.event.truncate.length``,
+    which it cannot set on a live session."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - static conf on live session
             pass
     _ship_package(spark)
+    _warn_if_unbounded(spark)
     return spark
 
 
