@@ -8,457 +8,110 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 All queries live in ``transit_data_pipeline_spark.operators`` --
 this module only adapts the registry to the driver contract.
 
-Window steering (the driver checks only the first ~50 entries of
-``queries()`` each round): ``_R10_FRONT`` pins this round's priority
-list -- the 46 queries that have never had a driver CORRECTNESS row,
-followed by the stalest greens (last checked in round 3, their
-implementations rewritten since -- dedup decimal layer, similarity
-rank family).  The post-front remainder sorts never-checked first,
-then re-confirmations by last-checked round ascending (stalest
-evidence refreshes first), rows-only (no-oracle) queries last.
+Check window: the correctness check covers only the first ~50 entries of
+``queries()`` each round, so their order decides which evidence is
+refreshed. ``queries()`` and ``oracle_sql()`` derive it from the
+``CORRECTNESS_r{N}.json`` files next to this module (``window_order``):
+
+1. a query's last-checked round is the highest N (parsed as a number)
+   of a file that has a row for it;
+2. ``_FRONT`` goes first: queries whose code changed after their last
+   row. An entry drops out on its own once a file newer than
+   ``_FRONT_AFTER`` has a row for it;
+3. the rest sort never-checked first, then oracle-backed before
+   rows-only, then stalest last-checked round first; ties keep
+   registry order.
+
+With no record files present the order is the registry order.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from transit_data_pipeline_spark.operators.registry import all_specs  # noqa: E402
 from transit_data_pipeline_spark.session import configure  # noqa: E402
 
-#: name -> round of its most recent driver CORRECTNESS row (folded
-#: from CORRECTNESS_r{1..9}.json; rounds 1-2 keys were all re-checked
-#: in round 3+, so the minimum surviving round is 3).  Drives the
-#: stalest-first re-confirmation rotation in ``_ordered_specs``.
-_LAST_CHECKED: dict[str, int] = {
-    # round 3 was the last driver check for these 22
-    "dedup_components": 3,
-    "dedup_embedding_cosine": 3,
-    "dedup_exact": 3,
-    "dedup_levenshtein": 3,
-    "dedup_lsh_verified": 3,
-    "dedup_minhash_lsh": 3,
-    "dedup_ngram_jaccard": 3,
-    "dedup_simhash": 3,
-    "embedding_norm_stats": 3,
-    "embedding_quantize_int8": 3,
-    "ml_gbt_cv_metrics": 3,
-    "multimodal_binary_meta": 3,
-    "multimodal_decode_probe": 3,
-    "multimodal_frame_sample": 3,
-    "multimodal_resize_features": 3,
-    "similarity_bruteforce_topk": 3,
-    "similarity_ivf_ann": 3,
-    "similarity_ivf_recall": 3,
-    "similarity_lsh_ann": 3,
-    "text_bpe_token_count": 3,
-    "text_fingerprint": 3,
-    "text_langid": 3,
-    # round 4 was the last driver check for these 49
-    "analysis_daily_trend_ma7": 4,
-    "analysis_delay_cascade": 4,
-    "analysis_dow_pattern": 4,
-    "analysis_monthly_quartiles": 4,
-    "analysis_recent_vs_historical": 4,
-    "analysis_route_stop_hotspots": 4,
-    "analysis_weather_impact": 4,
-    "bloom_join_prefilter": 4,
-    "bucketed_colocated_join": 4,
-    "column_profile": 4,
-    "conditional_aggregates": 4,
-    "corpus_curation_funnel": 4,
-    "corpus_data_card": 4,
-    "data_mix_rebalance": 4,
-    "day_name_trim": 4,
-    "dedup_incremental_snapshot": 4,
-    "doc_chunking": 4,
-    "dpp_partitioned_fact_join": 4,
-    "hash_split_3way": 4,
-    "jsonl_roundtrip": 4,
-    "kmeans_semantic_clusters": 4,
-    "limit_without_order": 4,
-    "multimodal_phash_near_dup": 4,
-    "mv_incremental_refresh": 4,
-    "pack_sequences": 4,
-    "per_source_cap": 4,
-    "rolling_distinct_users": 4,
-    "scd2_user_type_history": 4,
-    "sketch_countmin_freq": 4,
-    "sketch_histogram_quantiles": 4,
-    "sketch_hll_distinct": 4,
-    "sketch_kmv_distinct": 4,
-    "streaming_dedup": 4,
-    "streaming_feature_append": 4,
-    "streaming_hourly_rollup": 4,
-    "streaming_late_data_drop": 4,
-    "streaming_sliding_rate": 4,
-    "streaming_stateful_sessions": 4,
-    "synthetic_weather_model": 4,
-    "text_benchmark_contamination": 4,
-    "text_bpe_pair_counts": 4,
-    "text_gopher_rules": 4,
-    "text_pii_scrub": 4,
-    "text_quality_score": 4,
-    "text_repetition_filter": 4,
-    "text_token_stats": 4,
-    "vocab_heavy_hitters": 4,
-    "winsorize_clip": 4,
-    "zscore_normalize": 4,
-    # round 5 was the last driver check for these 49
-    "anti_join_orphans": 5,
-    "append_sink_roundtrip": 5,
-    "asof_join_prior_purchase": 5,
-    "case_coalesce_bounding": 5,
-    "column_profile_approx": 5,
-    "cross_join_grid": 5,
-    "csv_roundtrip": 5,
-    "cube_priority_status": 5,
-    "date_parts_smart_keys": 5,
-    "dedup_first_wins": 5,
-    "deterministic_sample": 5,
-    "dim_date_series": 5,
-    "distinct_projection": 5,
-    "dynamic_day_column": 5,
-    "exact_percentiles": 5,
-    "feature_join_update": 5,
-    "filter_project_cast": 5,
-    "global_stats": 5,
-    "gtfs_time_parse": 5,
-    "hourly_bucket_lookup": 5,
-    "hourly_event_rollup": 5,
-    "json_props_extract": 5,
-    "lag_cascade": 5,
-    "monthly_trend_ma3": 5,
-    "moving_avg_7day": 5,
-    "multikey_validation_join": 5,
-    "mv_refresh": 5,
-    "one_row_frame_lag": 5,
-    "perf_ranking_trends": 5,
-    "pivot_status_matrix": 5,
-    "range_join_price_bands": 5,
-    "rank_suite": 5,
-    "retention_filter": 5,
-    "risk_binning": 5,
-    "rollup_multi_granularity": 5,
-    "salted_skew_agg": 5,
-    "schema_bootstrap": 5,
-    "semi_join_per_nation": 5,
-    "sessionization_gap30m": 5,
-    "set_ops_suite": 5,
-    "sql_over_views": 5,
-    "star_join_region_rollup": 5,
-    "stddev_by_group": 5,
-    "stratified_sample": 5,
-    "topk_orders": 5,
-    "train_test_split": 5,
-    "two_level_agg_having": 5,
-    "union_all_counts": 5,
-    "window_value_suite": 5,
-    # round 6 was the last driver check for these 48
-    "abc_customer_classification": 6,
-    "analysis_stop_hotspots": 6,
-    "collation_aware_grouping": 6,
-    "cumulative_share": 6,
-    "curriculum_phases": 6,
-    "dedup_sorted_neighborhood": 6,
-    "isotonic_calibration_pav": 6,
-    "ks_two_sample": 6,
-    "lateral_topk_per_group": 6,
-    "parameterized_sql_query": 6,
-    "pareto_frontier": 6,
-    "quality_decile_calibration": 6,
-    "quantile_normalize_scores": 6,
-    "recursive_cte_hierarchy": 6,
-    "rfm_segments": 6,
-    "rouge_overlap_pairs": 6,
-    "spearman_rank_corr": 6,
-    "sql_pipe_syntax_query": 6,
-    "sql_scripting_batch": 6,
-    "sql_session_variables": 6,
-    "sql_udf_delay_category": 6,
-    "tpch_q10_returned_items": 6,
-    "tpch_q11_important_stock": 6,
-    "tpch_q13_customer_distribution": 6,
-    "tpch_q14_promo_revenue": 6,
-    "tpch_q15_top_supplier": 6,
-    "tpch_q16_supplier_part_counts": 6,
-    "tpch_q17_small_quantity_revenue": 6,
-    "tpch_q18_large_volume_customer": 6,
-    "tpch_q19_discounted_revenue": 6,
-    "tpch_q1_pricing_summary": 6,
-    "tpch_q20_potential_promotion": 6,
-    "tpch_q21_suppliers_kept_waiting": 6,
-    "tpch_q22_global_sales_opportunity": 6,
-    "tpch_q2_min_cost_supplier": 6,
-    "tpch_q3_shipping_priority": 6,
-    "tpch_q4_order_priority": 6,
-    "tpch_q5_local_supplier_volume": 6,
-    "tpch_q6_revenue_change": 6,
-    "tpch_q7_volume_shipping": 6,
-    "tpch_q8_market_share": 6,
-    "tpch_q9_product_profit": 6,
-    "try_functions_suite": 6,
-    "variant_props_extract": 6,
-    "vocab_coverage_curve": 6,
-    "vocab_zipf_fit": 6,
-    "xml_ingest_roundtrip": 6,
-    "zone_map_skipping_eval": 6,
-    # round 7 was the last driver check for these 50
-    "ab_cuped_adjustment": 7,
-    "ab_srm_check": 7,
-    "ab_test_zscore": 7,
-    "acf_daily_orders": 7,
-    "auc_mann_whitney": 7,
-    "benford_audit": 7,
-    "bh_fdr_control": 7,
-    "bootstrap_poisson_ci": 7,
-    "cross_corr_lagged": 7,
-    "cusum_changepoint": 7,
-    "did_estimator": 7,
-    "downsample_lttb": 7,
-    "event_attribution_last_touch": 7,
-    "event_funnel_steps": 7,
-    "event_markov_transitions": 7,
-    "event_mix_entropy_daily": 7,
-    "event_path_analysis": 7,
-    "event_session_pmi": 7,
-    "events_anomaly_mad": 7,
-    "events_rate_anomaly": 7,
-    "events_rolling_hour_range": 7,
-    "ewma_smoothing": 7,
-    "forecast_backtest_suite": 7,
-    "funnel_time_to_convert": 7,
-    "gains_lift_table": 7,
-    "gap_fill_linear_interp": 7,
-    "gap_fill_locf": 7,
-    "gini_token_concentration": 7,
-    "higher_order_lambda_suite": 7,
-    "holm_stepdown_ab_tests": 7,
-    "interarrival_dispersion": 7,
-    "interval_coverage": 7,
-    "mann_kendall_trend": 7,
-    "model_calibration_bins": 7,
-    "next_event_features": 7,
-    "ohlc_bars": 7,
-    "permutation_test_means": 7,
-    "propensity_strata_att": 7,
-    "retention_cohorts": 7,
-    "rolling_regression_slope": 7,
-    "seasonal_decompose_dow": 7,
-    "skewness_exact_moments": 7,
-    "streaks_active_days": 7,
-    "survival_km_retention": 7,
-    "theilsen_trend": 7,
-    "time_range_window": 7,
-    "time_weighted_avg": 7,
-    "tpch_q12_shipping_priority_class": 7,
-    "welch_ttest": 7,
-    "wilson_ci_conversion": 7,
-    # round 8 was the last driver check for these 50
-    "contrastive_pair_mining": 8,
-    "dedup_cluster_stats": 8,
-    "dedup_containment": 8,
-    "dedup_graph_triangles": 8,
-    "dedup_keep_best": 8,
-    "dedup_minhash_incremental": 8,
-    "dedup_semdedup": 8,
-    "dedup_substring_spans": 8,
-    "doc_ngram_novelty": 8,
-    "dp_noisy_counts": 8,
-    "dp_quantile_exponential": 8,
-    "embedding_binary_quantization": 8,
-    "embedding_centroid_drift": 8,
-    "embedding_knn_outliers": 8,
-    "embedding_matryoshka_recall": 8,
-    "embedding_pca_power": 8,
-    "erasure_cascade_audit": 8,
-    "fellegi_sunter_linkage": 8,
-    "jl_random_projection": 8,
-    "js_divergence_sources": 8,
-    "k_anonymity_audit": 8,
-    "l_diversity_audit": 8,
-    "lsh_threshold_sweep": 8,
-    "minhash_source_overlap": 8,
-    "ml_frozen_prediction_metrics": 8,
-    "moments_partial_merge": 8,
-    "multimodal_shard_packing": 8,
-    "quality_weighted_sampling": 8,
-    "retrieval_maxsim_late_interaction": 8,
-    "retrieval_ndcg_eval": 8,
-    "retrieval_rrf_fusion": 8,
-    "simhash_eval_pr": 8,
-    "sketch_bloom_membership": 8,
-    "sketch_ddsketch_quantiles": 8,
-    "sketch_join_cardinality": 8,
-    "sketch_kmv_intersection": 8,
-    "sketch_kmv_rolling_distinct": 8,
-    "sketch_kmv_union": 8,
-    "sketch_native_hll_datasketches": 8,
-    "streaming_backfill_bridge": 8,
-    "streaming_cdc_upsert": 8,
-    "streaming_checkpoint_resume": 8,
-    "streaming_psi_drift": 8,
-    "streaming_session_window": 8,
-    "streaming_stream_stream_join": 8,
-    "streaming_topk_trending": 8,
-    "survivorship_merge": 8,
-    "t_closeness_audit": 8,
-    "token_budget_mix_solver": 8,
-    "topk_two_level_merge": 8,
-    # round 9 was the last driver check for these 50
-    "adamic_adar_link_prediction": 9,
-    "agg_builtins_suite": 9,
-    "argmax_per_group": 9,
-    "array_agg_suite": 9,
-    "bfs_shortest_hops": 9,
-    "category_entropy_profile": 9,
-    "chi2_feature_relevance": 9,
-    "clustered_write_roundtrip": 9,
-    "consistent_hash_shards": 9,
-    "corr_features": 9,
-    "data_contract_validator": 9,
-    "dataframe_transpose_report": 9,
-    "date_functions_suite": 9,
-    "dau_wau_stickiness": 9,
-    "event_pattern_automaton": 9,
-    "grouping_sets_report": 9,
-    "hits_trade_graph": 9,
-    "join_skew_advisor": 9,
-    "kcore_trade_graph": 9,
-    "layout_run_length": 9,
-    "map_functions_suite": 9,
-    "market_basket_lift": 9,
-    "mutual_information": 9,
-    "nation_trade_pagerank": 9,
-    "nearest_event_join": 9,
-    "null_safe_join": 9,
-    "percentile_disc_suite": 9,
-    "point_in_time_features": 9,
-    "regexp_functions_suite": 9,
-    "salted_skew_join": 9,
-    "scd2_as_of_lookup": 9,
-    "schema_evolution_merge": 9,
-    "session_window_dynamic_gap": 9,
-    "shapley_channel_attribution": 9,
-    "shuffle_hash_join_hint": 9,
-    "source_freshness_monitor": 9,
-    "string_agg_ordered": 9,
-    "string_functions_suite": 9,
-    "text_bigram_perplexity": 9,
-    "text_bm25_topk": 9,
-    "text_inverted_index": 9,
-    "text_kneser_ney_bigram": 9,
-    "text_tfidf_keywords": 9,
-    "text_winnowing_fingerprints": 9,
-    "time_decay_attribution": 9,
-    "unpivot_melt": 9,
-    "weighted_percentiles": 9,
-    "window_ignore_nulls_suite": 9,
-    "woe_encoding": 9,
-    "zorder_key_layout": 9,
-}
-
-#: Queries with any prior driver row (re-confirmation pool).
-_EVER_CHECKED = frozenset(_LAST_CHECKED)
-
-
-#: Round-10 front of the driver's ~50-query check window: the 46
-#: never-driver-checked queries (VERDICT r9 item 1 -- draining these
-#: gives every registered query a driver row), then the stalest
-#: round-3 greens to claim any leftover slots (VERDICT r9 item 2:
-#: their implementations gained the deterministic-decimal layer and
-#: the bucketed similarity rewrite since round 3, so their old rows
-#: are stale evidence).  ml_gbt_cv_metrics is excluded from the
-#: stale refresh tail: rows-only AND the slowest query in the
-#: registry -- it sorts last anyway.
-_R10_FRONT = (
-    # -- 46 never-checked: storage/infra ------------------------------
-    "ivm_join_view_delta",
-    "cdc_apply_changes",
-    "snapshot_diff_cdc",
-    "compaction_binpack",
-    "orc_roundtrip",
-    "partition_stats_manifest",
-    "analyze_table_stats",
-    "bitmap_index_intersect",
-    "federated_format_union",
-    "partition_retention_drop",
-    "late_arriving_dim_handling",
-    "hierarchy_closure_rollup",
-    "observe_pipeline_metrics",
-    "corpus_merkle_manifest",
-    # -- never-checked: text / curation -------------------------------
-    "text_boilerplate_prune",
-    "langid_confusion_matrix",
-    "tokenizer_fertility",
-    "pmi_collocations",
-    "script_char_classes",
-    "keyword_tag_taxonomy",
-    "vocab_oov_rate",
-    "source_distinctive_terms",
-    "pii_scrub_eval",
-    "data_mix_temperature",
-    # -- never-checked: ML-prep / eval --------------------------------
-    "similarity_pq_codes",
-    "similarity_adc_topk",
-    "feature_hashing",
-    "target_encode_loo",
-    "robust_scale_iqr",
-    "neyman_allocation",
-    "weighted_reservoir_sample",
-    "group_kfold_split",
-    "epoch_shuffle_plan",
-    "length_bucket_packing",
-    "span_corruption_plan",
-    "negative_sampling_plan",
-    "feature_drift_psi",
-    "label_centroid_kappa",
-    "conformal_interval_calibration",
-    "quantile_pinball_eval",
-    "covariate_shift_weights",
-    "ridge_regression_closed_form",
-    "decision_stump_gain",
-    # -- never-checked: multimodal ------------------------------------
-    "multimodal_audio_energy",
-    "multimodal_scene_segments",
-    "multimodal_modality_mix",
-    # -- stalest greens (last row: round 3; rewritten since) ----------
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_lsh_verified",
-    "dedup_embedding_cosine",
-    "similarity_ivf_ann",
-    "similarity_bruteforce_topk",
-    "embedding_quantize_int8",
-    "text_langid",
-    "dedup_simhash",
-    "multimodal_phash_near_dup",
+#: Round stamp of ``_FRONT``: every entry's code changed after its
+#: last row in CORRECTNESS_r{1..11}.json.
+_FRONT_AFTER = 11
+_FRONT = (
+    # callers of ranking.two_phase_rank / sorted_neighbors (last row
+    # r5/r6; the range-partition width changed in r11)
+    "pareto_frontier",
+    "abc_customer_classification",
+    "analysis_stop_hotspots",
+    "cumulative_share",
+    "train_test_split",
+    "rfm_segments",
+    "quality_decile_calibration",
+    "vocab_zipf_fit",
+    "vocab_coverage_curve",
+    "rouge_overlap_pairs",
+    "ks_two_sample",
+    "dedup_sorted_neighborhood",
+    "curriculum_phases",
+    "quantile_normalize_scores",
+    "isotonic_calibration_pav",
+    "spearman_rank_corr",
+    # rewritten in r11: curation funnel, components family
+    "corpus_curation_funnel",
+    "dedup_components",
+    "dedup_keep_best",
+    "dedup_cluster_stats",
+    # nation graph, one plan per query since r11
+    "nation_trade_pagerank",
+    "hits_trade_graph",
+    "bfs_shortest_hops",
+    "kcore_trade_graph",
 )
+
+
+def last_checked(records_dir: str) -> dict[str, int]:
+    """name -> highest N of a CORRECTNESS_r{N}.json with a row for it."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(records_dir):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(records_dir, fname)) as f:
+                for name in json.load(f):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
+def window_order(
+    names: Iterable[str],
+    rows_only: Iterable[str],
+    records_dir: str,
+    front: Iterable[str] = _FRONT,
+    front_after: int = _FRONT_AFTER,
+) -> list[str]:
+    """Order ``names`` for the correctness check window (module docstring)."""
+    names = list(names)
+    last = last_checked(records_dir)
+    if not last:
+        return names
+    known, rows_only = set(names), set(rows_only)
+    head = [n for n in front if n in known and last.get(n, 0) <= front_after]
+    fronted = set(head)
+    rest = [n for n in names if n not in fronted]
+    rest.sort(key=lambda n: (n in last, n in rows_only, last.get(n, 0)))
+    return head + rest
 
 
 def _ordered_specs():
     specs = all_specs()
-    front = [n for n in _R10_FRONT if n in specs]
-    in_front = set(front)
-    rest = [n for n in specs if n not in in_front]
-    # Never-driver-checked queries claim slots before re-confirmations;
-    # re-confirmations refresh stalest evidence first (last-checked
-    # round ascending); oracle-backed (strong hash-checked rows)
-    # before rows-only (e.g. the GBT cross-validation run, which is
-    # also the slowest query in the registry).
-    rest.sort(
-        key=lambda n: (
-            n in _EVER_CHECKED,
-            specs[n].oracle is None,
-            _LAST_CHECKED.get(n, 0),
-        )
-    )
-    return {n: specs[n] for n in (*front, *rest)}
+    rows_only = [n for n, s in specs.items() if s.oracle is None]
+    return {n: specs[n] for n in window_order(specs, rows_only, _HERE)}
 
 
 def entry(spark: SparkSession) -> DataFrame:

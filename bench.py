@@ -63,8 +63,7 @@ def _mirror_fixtures(spark, sf_dir: str) -> str:
     the 8-core one), so scans parallelize natively and catalog.table's
     `spread` gate stops firing; broadcast dims stay single-file. Cache
     key = fixture path + per-table file-count layout; a mirror older
-    than its source is rebuilt. Opt out with SPARK_GRAFT_NO_MIRROR=1
-    (times the raw driver layout instead).
+    than its source is rebuilt.
     """
     import hashlib
     import shutil
@@ -120,8 +119,7 @@ def main() -> None:
     from transit_data_pipeline_spark.session import get_spark
 
     spark = get_spark("transit-spark-bench")
-    if os.environ.get("SPARK_GRAFT_NO_MIRROR", "") != "1":
-        sf_dir = _mirror_fixtures(spark, sf_dir)
+    sf_dir = _mirror_fixtures(spark, sf_dir)
 
     specs = {n: s for n, s in all_specs().items() if s.bench}
     # Warm the JVM + parquet footers once so per-query numbers measure
@@ -240,12 +238,8 @@ def main() -> None:
                 "sf": sf,
                 "n_queries": len(timings),
                 "comparable_total_vs_r01": comparable,
-                "fixture_layout": (
-                    "driver-raw"
-                    if os.environ.get("SPARK_GRAFT_NO_MIRROR", "") == "1"
-                    else "multi-file-mirror "
-                    + repr(getattr(_mirror_fixtures, "last_layout", {}))
-                ),
+                "fixture_layout": "multi-file-mirror "
+                + repr(_mirror_fixtures.last_layout),
                 "session_floor_sec": floor,
                 "net_total": round(sum(net.values()), 3),
                 "queries": timings,

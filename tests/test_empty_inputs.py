@@ -197,3 +197,30 @@ def empty_dir(spark, sf_dir, tmp_path_factory):
 def test_operator_survives_empty_tables(spark, empty_dir, name):
     df = all_specs()[name].fn(spark, empty_dir)
     assert df.count() >= 0  # plans and executes; no exception
+
+
+def test_bitmap_index_intersect_matches_oracle_on_empty_tables(
+    spark, empty_dir
+):
+    """Empty orders: the query and its DuckDB twin both give the one
+    summary row (0, 0, 0, NULL, 0, NULL), compared as SQL values (the
+    pandas path of ``compare`` reads a NULL boolean as None from Spark
+    but NaN from DuckDB)."""
+    import duckdb
+
+    spec = all_specs()["bitmap_index_intersect"]
+    con = duckdb.connect()
+    for t in _TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS "
+            f"SELECT * FROM '{empty_dir}/{t}.parquet/*.parquet'"
+        )
+    cur = con.execute(spec.oracle)
+    duck_cols = [d[0] for d in cur.description]
+    duck_rows = cur.fetchall()
+    con.close()
+    df = spec.fn(spark, empty_dir)
+    assert df.columns == duck_cols
+    assert [tuple(r) for r in df.collect()] == duck_rows == [
+        (0, 0, 0, None, 0, None)
+    ]

@@ -1,10 +1,12 @@
 """Drive the full driver contract end-to-end: load __spark_entry__
 in a fresh process, hostile-timezone session, run every query at
 sf0.01 and compare against its DuckDB oracle with bitwise float
-checks. Run from a NON-repo cwd:  python tools/drive_contract.py
+checks. Run from a NON-repo cwd:  python <checkout>/tools/drive_contract.py
+(it drives the checkout it lives in).
 """
-import importlib.util, sys, math
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+import importlib.util, os, sys, math
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")

@@ -6,7 +6,7 @@
 Usage:
   python tools/profile_query.py q1 q2 ...        # time + plan to stdout
   python tools/profile_query.py --top 20         # slowest-by-net from BENCH_FULL
-  python tools/profile_query.py --plans-dir plans/r10 --suffix before q1 q2
+  python tools/profile_query.py --plans-dir /tmp/plans --suffix before q1 q2
   python tools/profile_query.py --reps 3 q1      # best-of-3
   python tools/profile_query.py --jobs q1        # per-job wall breakdown
 """
@@ -55,8 +55,7 @@ def main() -> None:
 
     spark = get_spark("transit-spark-profile")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if os.environ.get("SPARK_GRAFT_NO_MIRROR", "") != "1":
-        sf_dir = bench._mirror_fixtures(spark, sf_dir)
+    sf_dir = bench._mirror_fixtures(spark, sf_dir)
 
     # Same warmups as bench.py: JVM/parquet, Python worker pool.
     specs["perf_ranking_trends"].fn(spark, sf_dir).write.format("noop").mode(
