@@ -107,7 +107,7 @@ def test_window_fronts_the_unexpired_front(order):
     assert order[: len(live)] == live
     if max(last.values()) <= entry_mod._FRONT_AFTER:
         assert live == list(entry_mod._FRONT)
-        assert len(live) == 24 and set(live) <= set(order[:WINDOW])
+        assert len(live) == 25 and set(live) <= set(order[:WINDOW])
 
 
 def test_window_skips_the_two_newest_rounds(order):

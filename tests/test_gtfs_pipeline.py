@@ -202,6 +202,17 @@ def _optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn`` under its own job group; returns (result, jobs run)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def refresh(spark, pipeline, tmp_path_factory):
     """One nightly model refresh (CSV → operational → warehouse →
@@ -210,6 +221,7 @@ def refresh(spark, pipeline, tmp_path_factory):
     from transit_data_pipeline_spark.gtfs import features, ingest, ml, warehouse
 
     staging = pipeline[0]
+    sc = spark.sparkContext
     spark.catalog.clearCache()
     op = ingest.build_operational(staging)
     ingest.quality_audits(staging).collect()
@@ -217,20 +229,18 @@ def refresh(spark, pipeline, tmp_path_factory):
     as_of = op["delay_events"].agg(
         F.date_format(F.max(F.to_date("actual_arrival")), "yyyy-MM-dd")
     ).first()[0]
-    feats = features.build_features(op, as_of)
+    feats, feature_jobs = _jobs_in_group(
+        sc, "gtfs-refresh:build_features", lambda: features.build_features(op, as_of)
+    )
     train_df, test_df = features.train_test_views(feats)
     model = ml.train(train_df, max_depth=3, max_iter=3)
-    sc = spark.sparkContext
-    group = "gtfs-refresh:evaluate"
-    sc.setJobGroup(group, group)
-    try:
-        ml.evaluate(model, test_df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    eval_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    _, eval_jobs = _jobs_in_group(
+        sc, "gtfs-refresh:evaluate", lambda: ml.evaluate(model, test_df)
+    )
     ml.save_model(model, str(tmp_path_factory.mktemp("model")), trained_at=as_of)
-    return dict(staging=staging, op=op, feats=feats, eval_jobs=eval_jobs)
+    return dict(
+        staging=staging, op=op, feats=feats, feature_jobs=feature_jobs, eval_jobs=eval_jobs
+    )
 
 
 def test_operational_and_feature_tables_read_no_csv(refresh):
@@ -251,6 +261,13 @@ def test_refresh_leaves_cache_manager_empty(spark, refresh):
 
 def test_evaluate_is_one_pass(refresh):
     assert 0 < refresh["eval_jobs"] <= 2, refresh["eval_jobs"]
+
+
+def test_feature_build_is_one_aggregate(refresh):
+    """The 11 trailing means come from one aggregate, one join and one
+    pivot (about 14 jobs with the pin), not one groupBy+join per mean
+    (31-32)."""
+    assert 0 < refresh["feature_jobs"] <= 16, refresh["feature_jobs"]
 
 
 def test_operational_counts_per_csv_dir(spark, fixtures, tmp_path):

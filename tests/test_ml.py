@@ -222,6 +222,9 @@ def test_daily_pipeline_chain(spark, feature_frames, tmp_path):
         spark, result["predictions"]["store"], as_of, retention_days=30
     )
     assert swept["n_partitions_dropped"] == 1
+    assert swept["cutoff"] == spark.range(1).select(
+        F.date_sub(F.lit(as_of).cast("date"), 30).cast("string")
+    ).first()[0]
     assert not os.path.isdir(old_dir)
 
 
@@ -340,3 +343,133 @@ def test_evaluate_empty_split_raises_like_evaluator(scored):
     with pytest.raises(IllegalArgumentException) as got:
         ml.evaluate(model, empty)
     assert str(got.value) == str(want.value)
+
+
+# ---- the trailing means of the feature table ----------------------------
+
+
+@pytest.fixture(scope="module")
+def edge_case_features(spark, feature_frames):
+    """feature_frames' operational tables plus the cases the trailing
+    means must get right: NULL weather_condition and day_of_week keys, a
+    route whose events all lie outside the 7-day window, and a trip that
+    visits one stop twice. Returns (operational, as_of, features)."""
+    from datetime import datetime, time, timedelta
+
+    from transit_data_pipeline_spark.gtfs import features
+
+    op, _ = feature_frames
+    ev = op["delay_events"]
+    as_of, max_id = ev.agg(F.max(F.to_date("actual_arrival")), F.max("id")).first()
+    stop_a, stop_b = [r.stop_id for r in op["stops"].select("stop_id").limit(2).collect()]
+
+    def rows(like, data, cols):
+        frame = spark.createDataFrame(data, cols)
+        return like.unionByName(
+            frame.select(*[F.col(c).cast(like.schema[c].dataType) for c in cols]),
+            allowMissingColumns=True,
+        )
+
+    days = [as_of - timedelta(days=d) for d in (10, 12, 15, 20)]
+    old_events = [
+        (max_id + i + 1, "T_OLD", stop, 8 * 3600, datetime.combine(day, time(8, 5)),
+         delay, "clear", day.weekday(), False)
+        for i, (day, stop, delay) in enumerate(zip(days, [stop_a, stop_b] * 2, (5, 7, 9, 11)))
+    ]
+    ev = ev.withColumn(
+        "weather_condition", F.when(F.col("id") % 7 != 0, F.col("weather_condition"))
+    ).withColumn("day_of_week", F.when(F.col("id") % 5 != 0, F.col("day_of_week")))
+    edge = dict(
+        op,
+        routes=rows(op["routes"], [("R_OLD", 3)], ["route_id", "route_type"]),
+        trips=rows(
+            op["trips"],
+            [("T_OLD", "R_OLD", "WK", 0)],
+            ["trip_id", "route_id", "service_id", "direction_id"],
+        ),
+        stop_times=rows(
+            op["stop_times"],
+            [("T_OLD", stop_a, 1), ("T_OLD", stop_b, 2), ("T_OLD", stop_a, 3)],
+            ["trip_id", "stop_id", "stop_sequence"],
+        ),
+        delay_events=rows(
+            ev,
+            old_events,
+            ["id", "trip_id", "stop_id", "scheduled_arrival", "actual_arrival",
+             "delay_minutes", "weather_condition", "day_of_week", "is_holiday"],
+        ),
+    )
+    return edge, as_of, features.build_features(edge, as_of.isoformat())
+
+
+def _reference_means(op, as_of) -> dict[int, dict[str, float]]:
+    """event id -> trailing means, in pandas from the operational frames:
+    per key set and window, the mean delay of the window's events by
+    key; a NULL key or a key absent from the window gives 0.0."""
+    import pandas as pd
+
+    from transit_data_pipeline_spark.gtfs.features import TRAILING_MEANS
+
+    ev = (
+        op["delay_events"]
+        .join(op["trips"].select("trip_id", "route_id"), "trip_id")
+        .select(
+            "id", "trip_id", "route_id", "stop_id", "scheduled_arrival", "delay_minutes",
+            "weather_condition", "day_of_week", F.to_date("actual_arrival").alias("day"),
+        )
+        .toPandas()
+    )
+    ev["hour_of_day"] = ev["scheduled_arrival"] // 3600 % 24
+    ev["age"] = (pd.Timestamp(as_of) - pd.to_datetime(ev["day"])).dt.days
+    out: dict[int, dict[str, float]] = {int(i): {} for i in ev["id"]}
+    for keys, cols in TRAILING_MEANS.items():
+        for days, name in cols.items():
+            window = ev[(ev["age"] >= 0) & (ev["age"] <= days)]
+            means = window.groupby(list(keys))["delay_minutes"].mean()
+            by_key = {k if isinstance(k, tuple) else (k,): v for k, v in means.items()}
+            for row in ev[["id", *keys]].itertuples(index=False):
+                key = tuple(row[1:])
+                null = any(pd.isna(k) for k in key)
+                out[int(row[0])][name] = 0.0 if null else float(by_key.get(key, 0.0))
+    return out
+
+
+def test_trailing_means_match_pandas_reference(edge_case_features):
+    from transit_data_pipeline_spark.gtfs.features import MEAN_COLUMNS
+
+    op, as_of, feats = edge_case_features
+    want = _reference_means(op, as_of)
+    got = feats.select("feature_id", "route_id", "stop_id", "weather_condition",
+                       "day_of_week", *MEAN_COLUMNS).collect()
+    assert len(got) == len(want) + 2  # T_OLD's two events at stop_a give two rows each
+    for r in got:
+        assert {c: r[c] for c in MEAN_COLUMNS} == want[r.feature_id], r.feature_id
+
+    null_weather = [r for r in got if r.weather_condition is None]
+    null_dow = [r for r in got if r.day_of_week is None]
+    assert null_weather and all(r.avg_delay_same_weather_30d == 0.0 for r in null_weather)
+    assert null_dow and all(
+        r.avg_delay_same_dow_30d == r.avg_delay_route_dow_30d == 0.0 for r in null_dow
+    )
+    old = [r for r in got if r.route_id == "R_OLD"]
+    assert len(old) == 6
+    assert all(r.avg_delay_same_route_7d == 0.0 and r.avg_delay_same_route_30d > 0 for r in old)
+
+
+def test_feature_table_fit_ignores_its_layout(feature_frames):
+    """The feature table pinned at 1, 4 and 7 partitions gives the same
+    split and the same model: GBT subsamples with a per-partition seed,
+    so the fit must not see the upstream layout."""
+    from transit_data_pipeline_spark.gtfs import ml
+    from transit_data_pipeline_spark.gtfs.features import train_test_views
+    from transit_data_pipeline_spark.operators._util import _pin
+
+    _, feats = feature_frames
+    preds = []
+    for n in (1, 4, 7):
+        pinned = _pin(feats.repartition(n))
+        assert pinned.rdd.getNumPartitions() == n
+        train_df, test_df = train_test_views(pinned)
+        model = ml.train(train_df, max_iter=3, max_depth=4)
+        preds.append(sorted(model.transform(test_df).select("feature_id", "prediction").collect()))
+    assert preds[0] and preds[0] == preds[1] == preds[2]

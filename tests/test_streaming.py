@@ -119,3 +119,15 @@ def test_session_window_closes_at_exact_30min_gap(spark, tmp_path):
         .collect()
     )
     assert sorted(r["count"] for r in out) == [1, 3]
+
+
+def test_quality_gates_empty_table(spark):
+    """No rows: no recent data, nothing NULL, and stale."""
+    from transit_data_pipeline_spark.streaming import incremental as inc
+
+    empty = spark.createDataFrame([], "event_date date, delay_minutes int, trip_id string")
+    assert inc.quality_gates(empty, "2024-01-10") == {
+        "has_recent_data": False,
+        "no_null_critical": True,
+        "not_stale": False,
+    }

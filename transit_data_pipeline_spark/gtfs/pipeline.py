@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,11 +60,7 @@ def cleanup_old_predictions(
     a 100 TB store needs."""
     if not os.path.isdir(store):
         return {"n_partitions_dropped": 0}
-    cutoff = (
-        spark.range(1)
-        .select(F.date_sub(F.lit(run_date).cast("date"), retention_days).cast("string"))
-        .first()[0]
-    )
+    cutoff = str(date.fromisoformat(run_date) - timedelta(days=retention_days))
     dropped = 0
     for entry in sorted(os.listdir(store)):
         if not entry.startswith("prediction_date="):

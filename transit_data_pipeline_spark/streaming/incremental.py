@@ -113,19 +113,17 @@ def start_feature_append(
 
 def quality_gates(features: DataFrame, as_of_date: str) -> dict[str, bool]:
     """The DAG's check_data_quality gate (`ml_pipeline_dag.py:45-96`):
-    recent rows exist, critical columns non-null, table not stale."""
+    recent rows exist, critical columns non-null, table not stale.
+    One aggregate, one job; an empty table has no recent data and is
+    stale."""
     as_of = F.lit(as_of_date).cast("date")
-    recent = features.filter(F.col("event_date") >= F.date_sub(as_of, 7))
-    n_recent = recent.count()
-    n_null_critical = features.filter(
-        F.col("delay_minutes").isNull() | F.col("trip_id").isNull()
-    ).count()
-    max_date = features.agg(F.max("event_date")).first()[0]
-    stale = max_date is None or (
-        features.select(F.datediff(as_of, F.lit(max_date))).first()[0] > 3
-    )
+    n_recent, n_null_critical, days_stale = features.agg(
+        F.count(F.when(F.col("event_date") >= F.date_sub(as_of, 7), 1)),
+        F.count(F.when(F.col("delay_minutes").isNull() | F.col("trip_id").isNull(), 1)),
+        F.datediff(as_of, F.max("event_date")),
+    ).first()
     return {
         "has_recent_data": n_recent > 0,
         "no_null_critical": n_null_critical == 0,
-        "not_stale": not stale,
+        "not_stale": days_stale is not None and days_stale <= 3,
     }
