@@ -1,33 +1,77 @@
 #!/usr/bin/env python
 """Headline benchmark: run every benchmarkable registry query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
+local[$SPARK_GRAFT_CPUS], record a per-query ledger and print ONE JSON
+line.
 
-Timing excludes driver-side result transfer: each query is executed
-with the noop sink so the full plan (scan → shuffle → agg/window)
-runs, mirroring cluster-side cost.
+    python bench.py                        # every benched query -> BENCH_FULL.json
+    python bench.py --only q1 q2 --reps 3  # these queries, each best-of-3
+    python bench.py --only q1 --plans-dir DIR  # + DIR/q1.txt, explain("formatted")
+
+Each query is executed with the noop sink, so the full plan runs
+without driver-side result transfer. The reported wall is the best of
+N reps (:func:`reps`; ``--reps N`` sets N for every selected query).
+Each rep is two ``tdps_bench/layers.py`` spans whose job group names
+the query and rep: the ``spec.fn`` call (``build``: eager pins, driver
+loops, schema inference, streaming drains) and the noop write
+(``exec``); a stream's micro-batches (job group = its runId) count for
+the query that starts it. The walls come from a pass without Spark's
+event log, which costs the suite several percent. A second pass, in a
+new JVM with the event log on (temp dir removed at exit), runs each
+query at the same reps; its fastest rep's counters make the query's
+ledger row: ``build_s``, ``exec_s``, ``jobs``, ``stages``, ``tasks``,
+``executor_cpu_s``, ``shuffle_mb`` (shuffle bytes written) and
+``spill_mb`` (memory + disk spill). Jobs run outside every span (by a
+thread without its caller's job group) go to stderr and to
+BENCH_FULL.json's ``unattributed_jobs``.
 
 Output contract: the driver keeps only the LAST 2000 characters of
 stdout and parses the final JSON object from it, so the summary line
 is (a) printed last and (b) size-bounded — the per-query dict keeps
 the slowest queries first and drops fastest entries until the line
-fits. The complete per-query timing table (plus delta vs the round-1
-recording) is written to BENCH_FULL.json instead.
+fits. A full run writes the complete per-query table and the ledger to
+BENCH_FULL.json; a run with ``--only`` writes no file and prints one
+ledger row per query (``{"query": name, ...}``) before the summary line.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from transit_data_pipeline_spark.operators.registry import all_specs  # noqa: E402
+from transit_data_pipeline_spark.session import get_spark  # noqa: E402
+
 #: Hard budget for the printed summary line (driver tail is 2000).
 MAX_LINE = 1900
+
+#: Iterative driver-loop queries compile a fresh plan per loop round,
+#: so their run-to-run variance is ±40% (JIT/codegen debt).
+NOISY = frozenset({"corpus_curation_funnel", "dedup_components"})
+
+
+def reps(name: str, first_s: float) -> int:
+    """Reps of a query's best-of, given its first run's wall, which
+    pays one-off JIT / codegen / GC debt. Streaming queries take 3: run
+    1 also stages a fresh checkpoint and state-store/file-sink JIT the
+    warm-up cannot reach (30-80% over steady state; runs 2-3 within
+    ~10% of it). The noisy loop queries take 3, anything over 1.5 s
+    takes 2; sub-second noise is pennies, so the suite stays near one
+    pass."""
+    if name in NOISY or name.startswith("streaming_"):
+        return 3
+    return 2 if first_s > 1.5 else 1
 
 
 def _newest_mtime(path: str) -> float:
@@ -66,7 +110,6 @@ def _mirror_fixtures(spark, sf_dir: str) -> str:
     than its source is rebuilt.
     """
     import hashlib
-    import shutil
 
     from transit_data_pipeline_spark.catalog import (
         BROADCAST_TABLES,
@@ -110,41 +153,32 @@ def _mirror_fixtures(spark, sf_dir: str) -> str:
     return mdir
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
-    from transit_data_pipeline_spark.operators.registry import all_specs
-    from transit_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("transit-spark-bench")
-    sf_dir = _mirror_fixtures(spark, sf_dir)
+def _warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before any timed query."""
+    # The JVM + parquet footers, so per-query numbers measure the plan,
+    # not first-touch JIT.
+    _noop(all_specs()["perf_ranking_trends"].fn(spark, sf_dir))
 
-    specs = {n: s for n, s in all_specs().items() if s.bench}
-    # Warm the JVM + parquet footers once so per-query numbers measure
-    # the plan, not first-touch JIT.
-    specs["perf_ranking_trends"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
     # ...and the Python worker pool (one task per core), so the first
     # Arrow-UDF query doesn't pay worker spin-up in its timed run.
     def _noop_pdf(it):
         yield from it
 
-    spark.range(256).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_noop_pdf, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    _noop(
+        spark.range(256)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(_noop_pdf, "id long")
+    )
     # ...and the Structured-Streaming machinery (microbatch scheduler
     # thread pool, state-store provider registry, streaming-metrics
     # listeners): a one-file drain through a stateful aggregate pays
     # the engine's one-time init so the first timed streaming query
     # measures its plan, not engine bring-up (VERDICT r7 item 6).
-    import tempfile as _tf
-
-    with _tf.TemporaryDirectory(prefix="tdps_bench_warm_") as wdir:
+    with tempfile.TemporaryDirectory(prefix="tdps_bench_warm_") as wdir:
         spark.range(64).selectExpr("id", "id % 4 AS k").write.parquet(
             os.path.join(wdir, "src")
         )
@@ -162,115 +196,191 @@ def main() -> None:
             .awaitTermination()
         )
 
-    # Session floor: median of 5 runs of a trivial query (5-row region
-    # scan → noop sink). Every timed query pays this fixed per-run cost
-    # (job launch, scheduler round-trip, noop-commit protocol) — ~1 s
-    # locally — which drowns sub-second deltas. BENCH_FULL records
-    # `queries_net` (raw − floor, clamped at 0) next to the raw table
-    # so a +0.2 s round-over-round delta is distinguishable from floor
-    # jitter without cross-referencing SCALING.md (VERDICT r9 item 3).
-    floor_reps = []
+
+def _session_floor(spark, sf_dir: str) -> float:
+    """Median of 5 runs of a trivial query (5-row region scan → noop
+    sink). Every timed query pays this fixed per-run cost (job launch,
+    scheduler round-trip, noop-commit protocol) — ~1 s locally — which
+    drowns sub-second deltas; BENCH_FULL records ``queries_net`` (raw −
+    floor, clamped at 0) next to the raw table (VERDICT r9 item 3)."""
+    walls = []
     for _ in range(5):
         t0 = time.perf_counter()
-        spark.read.parquet(os.path.join(sf_dir, "region.parquet")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        floor_reps.append(time.perf_counter() - t0)
-    floor = round(sorted(floor_reps)[len(floor_reps) // 2], 3)
+        _noop(spark.read.parquet(os.path.join(sf_dir, "region.parquet")))
+        walls.append(time.perf_counter() - t0)
+    return round(sorted(walls)[len(walls) // 2], 3)
 
-    # Iterative driver-loop queries compile a fresh plan per loop round,
-    # so their run-to-run variance is ±40% (JIT/codegen debt) — one
-    # extra rep pins their minimum to steady state and stops round-over-
-    # round comparisons from chasing compile noise.
-    noisy = {"corpus_curation_funnel", "dedup_components"}
 
-    # The round-1 anchor set keeps best-of-2 semantics so the
-    # comparable_total metric stays apples-to-apples across rounds.
-    prev_path = os.path.join(REPO, "bench_r01_partial.json")
-    anchor = set(json.load(open(prev_path))) if os.path.exists(prev_path) else set()
+class StreamAlias(StreamingQueryListener):
+    """Attributes each stream's micro-batch jobs (job group = its runId)
+    to the span group in ``self.group``. Spark calls ``onQueryStarted``
+    synchronously with ``start()``, so that is the group of the query
+    that starts the stream."""
 
-    timings: dict[str, float] = {}
-    for name, spec in sorted(specs.items()):
-        # First run pays one-off JIT / codegen-compile / GC costs.
-        # Re-measure (best-of) only where that debt is material: the
-        # noisy loop queries (3 reps), the r01 anchor set (its
-        # recorded numbers were best-of-2), and anything whose first
-        # run exceeds 1.5 s — sub-second non-anchor queries' noise is
-        # absolute pennies, and skipping their re-run keeps the whole
-        # suite's wall time near one pass as the registry grows.
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = time.perf_counter() - t0
-        # Streaming queries always get best-of-3: the first run stages
-        # scratch dirs and a fresh checkpoint AND pays family-level
-        # JIT debt (state-store/file-sink codepaths) that the generic
-        # warmup can't reach — measured: run 1 is 30-80% over steady
-        # state, runs 2-3 sit within ~10% of it.
-        reps = (
-            2
-            if name in noisy or name.startswith("streaming_")
-            else (1 if best > 1.5 or name in anchor else 0)
+    def __init__(self, layers):
+        self.layers = layers
+        self.group = None
+
+    def onQueryStarted(self, event):
+        if self.group is not None:
+            self.layers.alias(str(event.runId), self.group)
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _bench(specs, sf_dir: str, n_reps: dict, plans_dir: str | None, log_dir: str | None):
+    """One pass over ``specs`` in a JVM of its own, with Spark's event log
+    in ``log_dir`` if given. A query runs ``n_reps[name]`` reps, or as
+    many as :func:`reps` asks. Returns (Layers, query -> span group of its
+    fastest rep, query -> reps run, session floor, counters per span group
+    or None)."""
+    from layers import Layers, fold_event_log
+    from pyspark import SparkContext
+    from run import stop
+
+    spark = get_spark("transit-spark-bench")
+    try:
+        layers = Layers(spark.sparkContext)
+        # Its own span, so jobs left in the harness group ran outside every span.
+        with layers.span("setup"):
+            sf_dir = _mirror_fixtures(spark, sf_dir)
+            _warm_up(spark, sf_dir)
+            floor = _session_floor(spark, sf_dir)
+        listener = StreamAlias(layers)
+        spark.streams.addListener(listener)
+
+        def run_rep(spec, group: str):
+            listener.group = group
+            with layers.span(group, "", "build"):
+                df = spec.fn(spark, sf_dir)
+            with layers.span(group, "", "exec"):
+                _noop(df)
+            return layers.seconds(group), group, df
+
+        best: dict[str, str] = {}  # query -> span group of its fastest rep
+        n_run: dict[str, int] = {}
+        for name, spec in sorted(specs.items()):
+            runs = [run_rep(spec, f"{name}#0")]
+            for i in range(1, n_reps.get(name) or reps(name, runs[0][0])):
+                runs.append(run_rep(spec, f"{name}#{i}"))
+            _, best[name], df = min(runs, key=lambda run: run[0])
+            n_run[name] = len(runs)
+            if plans_dir:
+                with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                    f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
+        app_id = spark.sparkContext.applicationId
+    finally:
+        stop(spark)
+        # The next pass launches a JVM of its own, which reads the
+        # PYSPARK_SUBMIT_ARGS of that time.
+        SparkContext._gateway = SparkContext._jvm = None
+
+    per_group = layers.by_layer(fold_event_log(log_dir, app_id)[0]) if log_dir else None
+    return layers, best, n_run, floor, per_group
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--only", nargs="+", metavar="NAME",
+        help="time these registered queries only; BENCH_FULL.json is not written",
+    )
+    ap.add_argument("--reps", type=int, help="make every query best-of-N")
+    ap.add_argument(
+        "--plans-dir", metavar="DIR",
+        help='write explain("formatted") of each query to DIR/<name>.txt',
+    )
+    args = ap.parse_args(argv)
+    if args.reps is not None and args.reps < 1:
+        ap.error("--reps must be at least 1")
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else -1.0
+
+    registered = all_specs()
+    if args.only:
+        unknown = [n for n in args.only if n not in registered]
+        if unknown:
+            ap.error(f"unknown queries: {unknown}")
+        specs = {n: registered[n] for n in args.only}
+    else:
+        specs = {n: s for n, s in registered.items() if s.bench}
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
+
+    sys.path.insert(0, os.path.join(REPO, "tdps_bench"))
+    from layers import HARNESS
+    from run import FOLDED
+
+    # Walls come from a pass without the event log, which costs the
+    # suite several percent; the ledger from a second pass with it, each
+    # query at the reps the first pass ran.
+    layers, best, n_run, floor, _ = _bench(
+        specs, sf_dir, dict.fromkeys(specs, args.reps), args.plans_dir, None
+    )
+    timings = {name: round(layers.seconds(group), 3) for name, group in best.items()}
+    log_dir = tempfile.mkdtemp(prefix="tdps_bench_eventlog_")
+    try:
+        # Before the JVM launches: the event log is a static conf. It
+        # leaves out what the fold never reads (accumulator copies of task
+        # metrics, AQE plan updates, stage and task starts): over half its bytes.
+        aqe = "org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate"
+        os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf spark.eventLog.{kv}" for kv in (
+                "enabled=true", "compress=false", "rolling.enabled=false",
+                f"dir=file://{log_dir}", "includeTaskMetricsAccumulators=false",
+                f"excludedPatterns={aqe},SparkListenerStageSubmitted,SparkListenerTaskStart",
+            )] + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")]
         )
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        layers, best, _, _, per_group = _bench(specs, sf_dir, n_run, None, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    stray = int(per_group.get(HARNESS, {}).get("jobs", 0))
+    if stray:
+        print(f"bench: the ledger misses {stray} jobs run outside every "
+              "query's span (by a thread without the caller's job group?)", file=sys.stderr)
+    ledger = {}
+    for name, group in best.items():
+        c = per_group.get(group, dict.fromkeys(FOLDED, 0.0))
+        ledger[name] = {
+            "build_s": round(layers.seconds(group, "build"), 3),
+            "exec_s": round(layers.seconds(group, "exec"), 3),
+            # counts are ints; amounts carry a unit suffix
+            **{k: round(c[k], 3) if k.endswith(("_s", "_mb")) else int(c[k]) for k in FOLDED},
+        }
 
     total = round(sum(timings.values()), 3)
-
-    # Full table + per-query delta vs the recovered round-1 timings.
-    # `comparable_total` sums only queries that existed in r1, so the
-    # suite total stays apples-to-apples as new queries are added.
-    prev_path = os.path.join(REPO, "bench_r01_partial.json")
-    prev = json.load(open(prev_path)) if os.path.exists(prev_path) else {}
-    delta = {
-        n: round(timings[n] - prev[n], 3) for n in timings if n in prev
-    }
-    comparable = round(sum(timings[n] for n in timings if n in prev), 3)
     net = {n: round(max(0.0, t - floor), 3) for n, t in timings.items()}
-    with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
-        json.dump(
-            {
-                "metric": "query_suite_total",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "n_queries": len(timings),
-                "comparable_total_vs_r01": comparable,
-                "fixture_layout": "multi-file-mirror "
-                + repr(_mirror_fixtures.last_layout),
-                "session_floor_sec": floor,
+    head = {"metric": "query_suite_total", "value": total, "unit": "sec", "sf": sf,
+            "n_queries": len(timings), "session_floor_sec": floor}
+    if args.only:
+        for name in specs:
+            print(json.dumps({"query": name, **ledger[name]}))
+    else:
+        with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
+            json.dump({
+                **head,
+                "fixture_layout": f"multi-file-mirror {_mirror_fixtures.last_layout!r}",
                 "net_total": round(sum(net.values()), 3),
                 "queries": timings,
                 "queries_net": net,
-                "delta_vs_r01": dict(
-                    sorted(delta.items(), key=lambda kv: kv[1], reverse=True)
-                ),
-            },
-            f,
-            indent=1,
-        )
+                "ledger": ledger,
+                "unattributed_jobs": stray,
+            }, f, indent=1)
 
     # Size-bounded summary: keep slowest queries, drop fastest until
     # the line fits the driver's stdout tail.
     by_cost = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
     keep = dict(by_cost)
-    while len(keep) > 1:
-        line = json.dumps(
-            {
-                "metric": "query_suite_total",
-                "value": total,
-                "unit": "sec",
-                "queries": dict(sorted(keep.items())),
-                "sf": sf,
-                "n_queries": len(timings),
-                "comparable_total_vs_r01": comparable,
-                "session_floor_sec": floor,
-            },
-            separators=(",", ":"),
-        )
-        if len(line) <= MAX_LINE:
+    while True:
+        line = json.dumps({**head, "queries": dict(sorted(keep.items()))}, separators=(",", ":"))
+        if len(line) <= MAX_LINE or len(keep) <= 1:
             break
         keep.pop(by_cost[len(keep) - 1][0])
     print(line)

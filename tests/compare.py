@@ -135,7 +135,27 @@ def _strict_problems(sp: pd.DataFrame, du: pd.DataFrame) -> list[str]:
                 "(driver hashes e.g. 719 vs 719.0 differently — "
                 "cast both sides to the same type)"
             )
+        na, nb = _null_spelling(sp[c]), _null_spelling(du[c])
+        if na and nb and na != nb:
+            problems.append(
+                f"NULL spelled differently in column {c!r}: "
+                f"spark={sorted(na)} duck={sorted(nb)} (a NULL BOOLEAN is "
+                "None from Spark but NaN from DuckDB, and the driver hashes "
+                "them differently — COALESCE it in both query and oracle)"
+            )
     return problems
+
+
+def _null_spelling(series: pd.Series) -> set[str]:
+    """How an object column spells NULL: {"None"}, {"NaN"}, both, or
+    neither. Non-object columns spell it the same on both engines."""
+    if series.dtype != object:
+        return set()
+    return {
+        "None" if v is None else "NaN"
+        for v in series
+        if v is None or (isinstance(v, float) and math.isnan(v))
+    }
 
 
 def _canon(df: pd.DataFrame) -> list[tuple]:

@@ -8,10 +8,11 @@ rejects them — and accepts the aligned shapes the fixes produce.
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pandas as pd
 
-from compare import _strict_problems
+from compare import _strict_problems, compare
 
 
 def test_int_vs_float_dtype_drift_rejected():
@@ -68,3 +69,19 @@ def test_all_null_column_indeterminate():
     du = pd.DataFrame({"v": np.array([np.nan, np.nan], dtype="float64")})
     probs = _strict_problems(sp, du)
     assert probs == [], probs
+
+
+_NULL_BOOL_SQL = "SELECT * FROM (VALUES (1, true), (2, CAST(NULL AS BOOLEAN))) AS t(k, b)"
+
+
+def test_null_boolean_from_each_engine_reported(spark):
+    # DuckDB's .df() reads a NULL BOOLEAN as NaN in an object column,
+    # Spark's toPandas() as None. The driver hashes the two differently
+    # (an all-NULL boolean was a driver red), so the mirror reports it.
+    con = duckdb.connect()
+    for sql in (_NULL_BOOL_SQL, "SELECT CAST(NULL AS BOOLEAN) AS b"):
+        problems = compare(spark.sql(sql), sql, con)
+        assert any(p.startswith("NULL spelled differently in column 'b'") for p in problems), problems
+    # The driver-safe spelling, COALESCE on both sides, compares equal.
+    sql = f"SELECT k, COALESCE(b, false) AS b FROM ({_NULL_BOOL_SQL})"
+    assert compare(spark.sql(sql), sql, con) == []

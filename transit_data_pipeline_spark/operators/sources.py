@@ -34,6 +34,15 @@ def _scratch(sf_dir: str, tag: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"tdps_{tag}_{h}")
 
 
+def _caller_properties(spark: SparkSession):
+    """Thread-pool initializer that gives each worker thread its own copy
+    of the calling thread's local properties (job group, scheduler pool),
+    so the pool's jobs belong to the caller's job group."""
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+    return lambda: jsc.setLocalProperties(props.clone())
+
+
 @register(
     "csv_roundtrip",
     ops=("S1", "S7"),
@@ -242,7 +251,7 @@ def mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.sparkContext.setJobDescription(None)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(3, initializer=_caller_properties(spark)) as pool:
         rows = list(pool.map(_refresh, views.items()))
     return spark.createDataFrame(
         rows,
@@ -1325,7 +1334,7 @@ def federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.sparkContext.setJobDescription(None)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(3, initializer=_caller_properties(spark)) as pool:
         list(
             pool.map(
                 _stage,

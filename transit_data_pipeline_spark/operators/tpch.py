@@ -172,9 +172,9 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     li = table(spark, sf_dir, "lineitem", spread=True)
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
-    r = table(spark, sf_dir, "region", spread=True).filter(
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
     nr = F.broadcast(
@@ -272,7 +272,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem", spread=True).filter(
         F.col("l_returnflag") == "R"
     )
-    n = table(spark, sf_dir, "nation", spread=True)
+    n = table(spark, sf_dir, "nation")
     rev = F.col("l_extendedprice").cast("decimal(19,4)") * (
         F.lit(1.0) - F.col("l_discount")
     ).cast("decimal(18,4)")
@@ -334,8 +334,8 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = table(spark, sf_dir, "orders", spread=True)
     c = table(spark, sf_dir, "customer", spread=True)
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
     ns = n.select(
         F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("supp_nation")
     )
@@ -413,12 +413,12 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     c = table(spark, sf_dir, "customer", spread=True)
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
-    r = table(spark, sf_dir, "region", spread=True).filter(
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_type") == "PROMO"
     )
     nc = F.broadcast(
@@ -488,7 +488,7 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1995-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-10-01").cast("timestamp"))
     )
-    p = table(spark, sf_dir, "part", spread=True)
+    p = table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice").cast("decimal(19,4)") * (
         F.lit(1.0) - F.col("l_discount")
     ).cast("decimal(18,4)")
@@ -635,7 +635,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(rev).alias("total_rev")
     )
     mx = revenue.agg(F.max("total_rev").alias("max_rev"))
-    s = table(spark, sf_dir, "supplier", spread=True)
+    s = table(spark, sf_dir, "supplier")
     return (
         revenue.crossJoin(F.broadcast(mx))
         .filter(F.col("total_rev") == F.col("max_rev"))
@@ -742,9 +742,9 @@ LIMIT 100
 """,
 )
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
-    r = table(spark, sf_dir, "region", spread=True).filter(
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(
         F.col("r_name") == "EUROPE"
     )
     eu_supp = F.broadcast(
@@ -767,7 +767,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = costs.groupBy(F.col("l_partkey").alias("b_partkey")).agg(
         F.min("unit_cost").alias("min_cost")
     )
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
     )
     winners = costs.join(
@@ -828,9 +828,9 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders", spread=True).select(
         "o_orderkey", "o_orderdate"
     )
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_name").like("%red%")
     )
     sn = F.broadcast(
@@ -897,8 +897,8 @@ ORDER BY p.part_value DESC, p.l_partkey
 """,
 )
 def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True).filter(
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_3"
     )
     nat_supp = F.broadcast(
@@ -953,7 +953,7 @@ WHERE b.l_quantity < 0.2 * a.avg_qty
 """,
 )
 def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#23"
     )
     li = table(spark, sf_dir, "lineitem", spread=True).select(
@@ -1054,12 +1054,12 @@ ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
 """,
 )
 def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#45")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45)
     )
-    flagged = table(spark, sf_dir, "supplier", spread=True).filter(
+    flagged = table(spark, sf_dir, "supplier").filter(
         F.col("s_acctbal") < 0
     ).select("s_suppkey")
     li = table(spark, sf_dir, "lineitem", spread=True).select(
@@ -1108,7 +1108,7 @@ WHERE
 )
 def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem", spread=True)
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
         & (F.col("p_size") <= 35)
     )
@@ -1161,7 +1161,7 @@ ORDER BY s.s_name
 """,
 )
 def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = table(spark, sf_dir, "part", spread=True).filter(
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_name").like("%red%")
     )
     li = table(spark, sf_dir, "lineitem", spread=True).filter(
@@ -1175,8 +1175,8 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("red_qty") > 300)
         .select("l_suppkey")
     )
-    s = table(spark, sf_dir, "supplier", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
     return (
         s.join(
             F.broadcast(red_vol),
@@ -1246,7 +1246,7 @@ def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFra
         F.count(F.lit(1)).alias("n_supp"),
         F.sum("any_late").alias("n_late"),
     )
-    s = table(spark, sf_dir, "supplier", spread=True)
+    s = table(spark, sf_dir, "supplier")
     return (
         per_os.join(
             per_o,
@@ -1294,7 +1294,7 @@ ORDER BY n.n_name
 )
 def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer", spread=True)
-    n = table(spark, sf_dir, "nation", spread=True)
+    n = table(spark, sf_dir, "nation")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         N.davg("c_acctbal").alias("v")
     )
