@@ -104,10 +104,12 @@ def _mirror_fixtures(spark, sf_dir: str) -> str:
     of 8 wins below 8 cores. Not one file per core (VERDICT r10 item 1:
     one-file-per-core splintered every sf0.1 scan stage into 32
     scheduling-overhead tasks and made the 32-core bench slower than
-    the 8-core one), so scans parallelize natively and catalog.table's
-    `spread` gate stops firing; broadcast dims stay single-file. Cache
-    key = fixture path + per-table file-count layout; a mirror older
-    than its source is rebuilt.
+    the 8-core one), so fact scans parallelize natively; broadcast dims
+    stay single-file. catalog.table's `spread` gate (target 8 tasks or
+    more) still fires below about 8 cores: at local[4] on the sf0.1
+    mirror the 8-file tables plan 4 scan splits and the dims 1, so all
+    ten tables are repartitioned. Cache key = fixture path + per-table
+    file-count layout; a mirror older than its source is rebuilt.
     """
     import hashlib
 

@@ -58,9 +58,10 @@ def test_bench_only_prints_ledger_and_keeps_bench_full(sf_dir, tmp_path):
     for name, row in rows.items():
         assert set(row) - {"query"} == LEDGER, name
         assert row["jobs"] >= 1, name
-    # Two of the streaming query's jobs run on the caller's thread; the
+    # One of the streaming query's jobs runs on the caller's thread (the
+    # noop write; its events schema is recorded by an earlier rep); the
     # rest are micro-batches, which run under the stream's runId.
-    assert rows["streaming_hourly_rollup"]["jobs"] >= 3
+    assert rows["streaming_hourly_rollup"]["jobs"] >= 2
     # mv_refresh writes and reads back three views from a thread pool:
     # at least six jobs, none left outside the query's job group.
     assert rows["mv_refresh"]["jobs"] >= 6

@@ -17,6 +17,7 @@ import pyarrow.parquet as pa_pq
 import pytest
 from pyspark.sql import types as T
 
+from transit_data_pipeline_spark import catalog
 from transit_data_pipeline_spark.catalog import TABLES, read_events_raw, table
 from transit_data_pipeline_spark.session import configure
 
@@ -107,10 +108,8 @@ def test_events_normalized_contract(spark, sf_dir):
 def test_streaming_schema_matches_batch(spark, sf_dir):
     """The stream's declared schema must be derived from the actual
     footer, never hardcoded — the r3 silent-corruption regression."""
-    from transit_data_pipeline_spark.operators.streamingops import _events_schema
-
     batch = table(spark, sf_dir, "events").drop("event_time")
-    raw = _events_schema(spark, sf_dir)
+    raw = read_events_raw(spark, sf_dir).schema
     assert [f.name for f in raw.fields] == [f.name for f in batch.schema.fields]
 
 
@@ -124,3 +123,31 @@ def test_events_read_leaves_session_conf_unchanged(spark, sf_dir):
     read_events_raw(spark, sf_dir).schema
     table(spark, sf_dir, "events").schema
     assert spark.conf.getAll == before
+
+
+def test_nanos_events_read_cold_and_memoized(spark, sf_dir, tmp_path):
+    """The TIMESTAMP(NANOS) encoding of ``events.ts`` (read as int64 via
+    ``nanosAsLong``) gives the contract on the path's first, inferring
+    read and on the reads that reuse its recorded schema, with the same
+    rows as the timestamp[us] fixture."""
+    import pyarrow as pa
+
+    us = pa_pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = us.schema.get_field_index("ts")
+    ns = us.set_column(i, "ts", us.column("ts").cast(pa.timestamp("ns")))
+    pa_pq.write_table(
+        ns, str(tmp_path / "events.parquet"), version="2.6", coerce_timestamps=None
+    )
+    assert str(pa_pq.read_schema(tmp_path / "events.parquet").field("ts").type) == (
+        "timestamp[ns]"
+    )
+    cols = ["event_id", "ts", "event_time", "user_id", "event_type", "value", "props"]
+    want = sorted(map(tuple, table(spark, sf_dir, "events").select(cols).collect()))
+    assert str(tmp_path / "events.parquet") not in catalog._SOURCES
+    for _ in ("cold", "memoized"):
+        df = table(spark, str(tmp_path), "events")
+        raw = read_events_raw(spark, str(tmp_path))
+        assert isinstance(raw.schema["ts"].dataType, T.LongType)
+        assert isinstance(df.schema["ts"].dataType, T.LongType)
+        assert isinstance(df.schema["event_time"].dataType, T.TimestampType)
+        assert sorted(map(tuple, df.select(cols).collect())) == want

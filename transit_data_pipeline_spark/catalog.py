@@ -1,22 +1,20 @@
-"""Table catalog over the driver's parquet test tables.
-
-Explicit declared schemas (never inference in production paths —
-SURVEY §1 "Schema system") and a single loader shared by queries,
-tests, and bench. Dimension-sized tables are flagged so join sites
-can `broadcast()` them (SURVEY §4: "broadcast the six dims").
-"""
+"""The one read path for the driver's parquet tables. Schemas are
+declared by the tables' writers (``tdps_bench/fixtures.py``, the test data's)
+and read from the footer once per table path per process: the first
+read infers them (one Spark job) into a record keyed by the path's
+``os.stat``; later reads pass that schema and launch no job (SURVEY §1).
+Dimension-sized tables are flagged so join sites can `broadcast()` them
+(SURVEY §4: "broadcast the six dims")."""
 
 from __future__ import annotations
 
-import functools
 import os
 import warnings
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: All driver-provided tables (TESTDATA.md).
 TABLES = (
@@ -44,14 +42,12 @@ def table(
     """Read one driver table. Parquet scan → columnar vectorized read
     with predicate pushdown + column pruning for free downstream.
 
-    ``spread=True`` adds a round-robin repartition to default
-    parallelism. The driver tables are single-row-group parquet files,
-    and a row group cannot be split — so scan-side work is one task no
-    matter the cluster size. For CPU-heavy map-side operators (md5
-    shingling, regex scoring, vector folds) the one-time shuffle buys
-    full-cluster parallelism. Leave False for scan→aggregate queries,
-    where the map side is cheap and the shuffle would dominate; on a
-    real multi-row-group layout this flag is a no-op conceptually.
+    ``spread=True`` adds a round-robin repartition when the planned scan
+    splits fall short of the width below: a driver table is one
+    unsplittable row group, so its scan is one task at any cluster size,
+    and CPU-heavy map sides (md5 shingling, regex scoring, vector folds)
+    buy full-cluster parallelism with one shuffle. Leave it False for
+    scan→aggregate queries, where the shuffle would dominate.
 
     ``events`` is normalized to a stable contract regardless of how the
     fixture encodes ``ts`` on disk (see :func:`normalize_events`):
@@ -62,27 +58,18 @@ def table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    df, src = _read(spark, sf_dir, name)
     if name == "events":
-        df = normalize_events(read_events_raw(spark, sf_dir))
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = normalize_events(df)
     if spread:
-        dp = max(spark.sparkContext.defaultParallelism, 8)
-        # Scale-adaptive spread width (r11, brief §2): one task per
-        # ~4 MB of on-disk input (SPREAD_TASK_BYTES),
-        # floor 8, capped at cluster width. The old target was bare
-        # defaultParallelism — a pure core-count constant that
-        # splintered every CPU-heavy map over a sub-MB corpus into 32
-        # near-empty ~14 ms tasks locally, while still being the right
-        # answer for corpora big enough to fill the cluster (the cap
-        # preserves it: bytes/4MB >= dp whenever there is real work).
-        target = min(dp, max(8, -(-_source_bytes(sf_dir, name) // SPREAD_TASK_BYTES)))
-        # Gate on the planned scan parallelism: the driver fixtures are
-        # single-row-group files (one task no matter the cluster), but on
-        # a real multi-file layout the scan already parallelizes and an
-        # unconditional repartition would be a gratuitous full shuffle.
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+        # One task per ~4 MB of on-disk input, floor 8, capped at cluster
+        # width (r11, brief §2); planned once per path and core count.
+        cores = spark.sparkContext.defaultParallelism
+        if cores not in src.widths:
+            target = min(max(cores, 8), max(8, -(-src.nbytes // SPREAD_TASK_BYTES)))
+            src.widths[cores] = target if df.rdd.getNumPartitions() < target else 0
+        if src.widths[cores]:
+            df = df.repartition(src.widths[cores])
     return df
 
 
@@ -91,14 +78,39 @@ def table(
 SPREAD_TASK_BYTES = 4 * 1024 * 1024
 
 
-@functools.lru_cache(maxsize=None)
-def _source_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one table (file or directory of part files),
-    walked once per table path per process. Falls back to a huge value
-    (=> spread to full cluster width) when the path is not os-stat-able
-    (e.g. a remote filesystem URI), and warns, once per path, that the
-    width was not sized by input."""
+class _Source(NamedTuple):
+    """A table path's record, made by its first read (module docstring)."""
+
+    stamp: tuple | None  # os.stat of the path then
+    schema: T.StructType
+    nbytes: int
+    widths: dict  # core count -> `spread` repartition width (0: none)
+
+
+_SOURCES: dict[str, _Source] = {}
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, _Source]:
+    """Read one table as stored, with the recorded schema (no job) unless
+    the path is new or was rewritten since its record was made."""
     path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:  # e.g. a remote filesystem URI: recorded once
+        stamp = None
+    src = _SOURCES.get(path)
+    if src is not None and src.stamp == stamp:
+        return spark.read.schema(src.schema).parquet(path), src
+    df = spark.read.parquet(path)
+    src = _SOURCES[path] = _Source(stamp, df.schema, _disk_bytes(path), {})
+    return df, src
+
+
+def _disk_bytes(path: str) -> int:
+    """On-disk bytes of a table file or directory; when the path is not
+    os-stat-able, a huge value (=> full cluster width) and a warning,
+    once per path as its record is made once."""
     try:
         if os.path.isdir(path):
             return sum(
@@ -111,8 +123,7 @@ def _source_bytes(sf_dir: str, name: str) -> int:
         warnings.warn(
             f"cannot stat {path!r}; spread=True repartitions it to full "
             "cluster width instead of one task per SPREAD_TASK_BYTES",
-            RuntimeWarning,
-            stacklevel=2,
+            RuntimeWarning, stacklevel=3,
         )
         return 1 << 60
 
@@ -123,8 +134,9 @@ def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nanosAsLong``) and plain ``timestamp[us]`` — this returns whichever
     the footer declares; :func:`normalize_events` unifies them. The
     nanos read needs ``nanosAsLong``, which ``session.get_spark`` and
-    ``session.configure`` set (``session.RUNTIME_CONF``)."""
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ``session.configure`` set (``session.RUNTIME_CONF``). Streams declare
+    its ``.schema``, which costs no job past the path's first read."""
+    return _read(spark, sf_dir, "events")[0]
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
@@ -150,12 +162,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
         f"unsupported events.ts dtype {ts_type}; expected int64 nanos "
         "or a timestamp — regenerated fixture changed encoding again?"
     )
-
-
-def tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once: ``t = tables(spark, d, 'orders', ...)``."""
-    use = names or TABLES
-    return {n: table(spark, sf_dir, n) for n in use}
 
 
 def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -31,15 +31,6 @@ from .registry import register
 SQL_EVENT_TIME = "make_timestamp(epoch_ns(ts) // 1000)"
 
 
-def _events_schema(spark: SparkSession, sf_dir: str):
-    """Streams must declare a schema up front; derive it from the actual
-    parquet footer (a batch read plans the schema without running a job)
-    so fixture regenerations that change the ``ts`` encoding — int64
-    TIMESTAMP(NANOS) vs plain timestamp[us] — can't silently feed the
-    stream misinterpreted raw values (the round-3 regression)."""
-    return read_events_raw(spark, sf_dir).schema
-
-
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file stream source lists a DIRECTORY; the driver table is a
     # single parquet file, so stage a symlink dir (testdata is
@@ -59,8 +50,10 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(src_dir, "events.parquet")
         if not os.path.exists(link):
             os.symlink(src, link)
-    stream = spark.readStream.schema(_events_schema(spark, sf_dir)).parquet(src_dir)
-    return normalize_events(stream)
+    # Streams declare the footer's schema, never a hardcoded one: a new
+    # ``ts`` encoding must not feed misread raw values (round-3 bug).
+    schema = read_events_raw(spark, sf_dir).schema
+    return normalize_events(spark.readStream.schema(schema).parquet(src_dir))
 
 
 #: Shuffle-partition count pinned for the micro-batch queries below.
@@ -339,7 +332,8 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = (
         normalize_events(
-            spark.readStream.schema(_events_schema(spark, sf_dir)).parquet(src)
+            spark.readStream.schema(read_events_raw(spark, sf_dir).schema)
+            .parquet(src)
         )
         .withWatermark("event_time", "2 hours")
         .dropDuplicates(["event_id"])
@@ -1090,7 +1084,7 @@ def streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = read_events_raw(spark, sf_dir)
     # Stage phase files from the RAW frame so the on-disk encoding
     # matches whatever the fixture uses; the stream schema is derived
-    # from the staged footer (see _events_schema rationale).
+    # from the staged footer (see _event_stream).
     # coalesce(1) on these phase files: fixture-scale staging only —
     # a production backfill keeps source partitioning.
     raw.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(

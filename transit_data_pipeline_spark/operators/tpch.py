@@ -12,6 +12,11 @@ orderkey with dimension filters applied BEFORE the join; Q5 is the
 classic star with region/nation broadcast and the s_nationkey =
 c_nationkey colocation condition evaluated inside the join. Top-k
 tails are sort+limit, never global windows.
+
+No read takes ``spread``: every map side here is a cheap filter or
+projection, and the repartition only added a shuffle (sf0.1 mirror,
+all 22 queries: 631 → 271 tasks and 17.1-18.6 → 13.3 s at local[4],
+541 → 181 tasks and 26.8-29.3 → 19.3-19.8 s at local[2]).
 """
 
 from __future__ import annotations
@@ -57,7 +62,7 @@ GROUP BY l_returnflag, l_linestatus
 """,
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
     ep = F.col("l_extendedprice").cast("decimal(19,4)")
@@ -106,13 +111,13 @@ LIMIT 10
 """,
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True).filter(
+    c = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
     )
     rev = F.col("l_extendedprice").cast("decimal(19,4)") * (
@@ -166,12 +171,12 @@ ORDER BY revenue DESC, n.n_name
 """,
 )
 def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True)
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = table(spark, sf_dir, "lineitem", spread=True)
+    li = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region").filter(
@@ -221,7 +226,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 """,
 )
 def tpch_q6_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_discount") >= 0.05)
@@ -264,12 +269,12 @@ LIMIT 20
 """,
 )
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True)
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
     n = table(spark, sf_dir, "nation")
@@ -328,12 +333,12 @@ ORDER BY supp_nation, cust_nation, l_year
 """,
 )
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    o = table(spark, sf_dir, "orders", spread=True)
-    c = table(spark, sf_dir, "customer", spread=True)
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     ns = n.select(
@@ -407,12 +412,12 @@ ORDER BY o_year
 """,
 )
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True)
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    c = table(spark, sf_dir, "customer", spread=True)
+    c = table(spark, sf_dir, "customer")
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region").filter(
@@ -484,7 +489,7 @@ WHERE l.l_shipdate >= TIMESTAMP '1995-09-01'
 """,
 )
 def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-10-01").cast("timestamp"))
     )
@@ -533,11 +538,11 @@ ORDER BY o.o_orderpriority
 """,
 )
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
     late = o.join(
@@ -580,8 +585,8 @@ ORDER BY custdist DESC, c_count DESC
 """,
 )
 def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True).select("c_custkey")
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    c = table(spark, sf_dir, "customer").select("c_custkey")
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_custkey", "o_orderkey")
     per_cust = (
@@ -624,7 +629,7 @@ ORDER BY s.s_suppkey
 """,
 )
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -678,14 +683,14 @@ LIMIT 100
 """,
 )
 def tpch_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True)
+    li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(N.dsum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 200)
     )
-    o = table(spark, sf_dir, "orders", spread=True)
-    c = table(spark, sf_dir, "customer", spread=True)
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     return (
         big.join(o, big["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -752,7 +757,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
     )
     costs = (
@@ -824,8 +829,8 @@ ORDER BY nation, o_year DESC
 """,
 )
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True)
-    o = table(spark, sf_dir, "orders", spread=True).select(
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
     s = table(spark, sf_dir, "supplier")
@@ -906,7 +911,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_suppkey"
         )
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     nat_lines = li.join(
@@ -956,7 +961,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     p = table(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#23"
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     brand_lines = li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"]).select(
@@ -1006,10 +1011,10 @@ ORDER BY ship_class
 """,
 )
 def tpch_q12_shipping_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders", spread=True).select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("l_orderkey", "l_shipdate")
@@ -1062,7 +1067,7 @@ def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     flagged = table(spark, sf_dir, "supplier").filter(
         F.col("s_acctbal") < 0
     ).select("s_suppkey")
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     )
     return (
@@ -1107,7 +1112,7 @@ WHERE
 """,
 )
 def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem", spread=True)
+    li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
         & (F.col("p_size") <= 35)
@@ -1164,7 +1169,7 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part").filter(
         F.col("p_name").like("%red%")
     )
-    li = table(spark, sf_dir, "lineitem", spread=True).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -1227,10 +1232,10 @@ LIMIT 100
 """,
 )
 def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders", spread=True).filter(
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     late = (
@@ -1293,12 +1298,12 @@ ORDER BY n.n_name
 """,
 )
 def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True)
+    c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         N.davg("c_acctbal").alias("v")
     )
-    recent = table(spark, sf_dir, "orders", spread=True).filter(
+    recent = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     ).select("o_custkey")
     return (

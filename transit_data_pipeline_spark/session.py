@@ -137,6 +137,7 @@ def configure(spark: SparkSession) -> SparkSession:
 def _ship_package(spark: SparkSession) -> None:
     if getattr(spark, "_tdps_pkg_shipped", False):
         return
+    import atexit
     import pathlib
     import tempfile
     import zipfile
@@ -148,6 +149,9 @@ def _ship_package(spark: SparkSession) -> None:
     with zipfile.ZipFile(zpath, "w") as zf:
         for p in sorted(pkg_dir.rglob("*.py")):
             zf.write(p, arcname=str(pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)))
+    # Removed at interpreter exit, not after addPyFile: executors fetch
+    # it on their first task.
+    atexit.register(pathlib.Path(zpath).unlink, missing_ok=True)
     try:
         spark.sparkContext.addPyFile(zpath)
     except Exception:  # pragma: no cover - e.g. Spark Connect sessions
