@@ -270,6 +270,38 @@ def test_feature_build_is_one_aggregate(refresh):
     assert 0 < refresh["feature_jobs"] <= 16, refresh["feature_jobs"]
 
 
+def _nightly_refresh(spark, csv_dir: str, model_dir: str) -> None:
+    """The nightly model refresh as the bench times it: GTFS CSV →
+    operational → warehouse → features → model, evaluated and saved."""
+    from transit_data_pipeline_spark.gtfs import features, ingest, ml, warehouse
+
+    staging = ingest.read_staging(spark, csv_dir)
+    op = ingest.build_operational(staging)
+    ingest.quality_audits(staging).collect()
+    warehouse.build_warehouse(op)["fact_delay_events"].count()
+    as_of = op["delay_events"].agg(
+        F.date_format(F.max(F.to_date("actual_arrival")), "yyyy-MM-dd")
+    ).first()[0]
+    train_df, test_df = features.train_test_views(features.build_features(op, as_of))
+    model = ml.train(train_df, max_depth=4, max_iter=3)
+    ml.evaluate(model, test_df)
+    ml.save_model(model, model_dir, trained_at=as_of)
+
+
+def test_warm_refresh_reuses_compiled_classes(spark, fixtures, tmp_path):
+    """A refresh generates about 192 whole-stage-codegen classes. With
+    the session's codegen cache sized for them, a second refresh in the
+    session compiles few (7-16 in the bench), not all of them again
+    (about 190 at Spark's default cache of 100 entries)."""
+    csv_dir, _ = fixtures
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    _nightly_refresh(spark, csv_dir, str(tmp_path / "model-1"))
+    before = compiles.getCount()
+    _nightly_refresh(spark, csv_dir, str(tmp_path / "model-2"))
+    assert compiles.getCount() - before <= 40, compiles.getCount() - before
+
+
 def test_operational_counts_per_csv_dir(spark, fixtures, tmp_path):
     """Two build_operational calls over two CSV dirs in one session each
     return their own dir's counts, also after the other was built."""

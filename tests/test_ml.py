@@ -473,3 +473,31 @@ def test_feature_table_fit_ignores_its_layout(feature_frames):
         model = ml.train(train_df, max_iter=3, max_depth=4)
         preds.append(sorted(model.transform(test_df).select("feature_id", "prediction").collect()))
     assert preds[0] and preds[0] == preds[1] == preds[2]
+
+
+def test_one_indexer_fits_like_one_per_column(feature_frames):
+    """The pipeline's one multi-column StringIndexer gives the same
+    labels as one indexer per categorical column: the same prediction
+    per feature_id and the same scores on one split."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import StringIndexer
+
+    from transit_data_pipeline_spark.gtfs import ml
+    from transit_data_pipeline_spark.gtfs.features import train_test_views
+
+    _, feats = feature_frames
+    train_df, test_df = train_test_views(feats)
+    one = ml.build_pipeline(max_depth=4, max_iter=3)
+    assert sum(isinstance(s, StringIndexer) for s in one.getStages()) == 1
+    per_column = Pipeline(stages=[
+        *[StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
+          for c in ml.CATEGORICAL],
+        *ml.build_pipeline(max_depth=4, max_iter=3).getStages()[1:],
+    ])
+    fill = train_df.na.fill(0, subset=list(ml.NUMERIC))
+    models = [one.fit(fill), per_column.fit(fill)]
+    preds = [
+        sorted(_preds(m, test_df).select("feature_id", "prediction").collect()) for m in models
+    ]
+    assert preds[0] and preds[0] == preds[1]
+    assert ml.evaluate(models[0], test_df) == ml.evaluate(models[1], test_df)

@@ -58,10 +58,13 @@ NUMERIC = (
 
 
 def build_pipeline(max_depth: int = 6, max_iter: int = 40, seed: int = 42) -> Pipeline:
-    indexers = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in CATEGORICAL
-    ]
+    # One multi-column indexer: the same per-column labels as one
+    # indexer per column, fitted in one pass and saved as one stage.
+    indexer = StringIndexer(
+        inputCols=list(CATEGORICAL),
+        outputCols=[f"{c}_idx" for c in CATEGORICAL],
+        handleInvalid="keep",
+    )
     assembler = VectorAssembler(
         inputCols=[f"{c}_idx" for c in CATEGORICAL] + list(NUMERIC),
         outputCol="features_raw",
@@ -77,7 +80,7 @@ def build_pipeline(max_depth: int = 6, max_iter: int = 40, seed: int = 42) -> Pi
         subsamplingRate=0.8,
         seed=seed,
     )
-    return Pipeline(stages=[*indexers, assembler, scaler, gbt])
+    return Pipeline(stages=[indexer, assembler, scaler, gbt])
 
 
 def train(train_df: DataFrame, **kwargs) -> PipelineModel:
@@ -153,7 +156,7 @@ def save_model(model: PipelineModel, path: str, version: str = "v1",
     """Persist the fitted pipeline + metadata. The reference pickles
     model + encoders + scaler + feature list in one artifact
     (`train_delay_model.py:436-465`); a PipelineModel already bundles
-    the indexers/assembler/scaler/regressor stages, so the artifact is
+    the indexer/assembler/scaler/regressor stages, so the artifact is
     the saved pipeline plus a JSON metadata sidecar."""
     import json
     import os

@@ -816,9 +816,9 @@ FROM stats
 """,
 )
 def erasure_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer", spread=True)
-    o = table(spark, sf_dir, "orders", spread=True)
-    li = table(spark, sf_dir, "lineitem", spread=True)
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
     nib = F.expr(
         "instr('0123456789abcdef',"
         " substring(md5(cast(c_custkey as string)), 1, 1)) - 1"

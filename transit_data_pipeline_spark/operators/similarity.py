@@ -779,6 +779,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lineage from re-executing multiplicatively — measured
     # 3.8 -> 2.4 s steady at sf0.1.
     _pin = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
+    # spread pays for the 64-dim quantizing map: without it the query
+    # ran a median 8% slower at local[4] at sf0.1 (SCALING.md).
     e = _pin(
         table(spark, sf_dir, "embeddings", spread=True).select(
             "vec_id", _q_col(F.col("embedding")).alias("q")

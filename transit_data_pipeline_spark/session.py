@@ -5,6 +5,19 @@ UTC session timezone (stable date/hour extraction — SURVEY §4 item 4),
 AQE on (runtime re-planning replaces the reference's ANALYZE/VACUUM
 statistics maintenance — reference `sql/performance_optimization.sql:96-109`),
 and Arrow for any Pandas-UDF exchange.
+
+Two static confs go on sessions built here only (a live session cannot
+take them):
+
+- ``spark.sql.event.truncate.length`` bounds the plan strings on the
+  listener bus; a session without it gets a warning (see get_spark).
+- ``spark.sql.codegen.cache.maxEntries`` = 1000 sizes the JVM-wide cache
+  of compiled whole-stage-codegen classes. One nightly model refresh
+  generates about 192 distinct classes, so at Spark's default of 100 each
+  refresh evicted the previous one's classes and compiled all of them
+  again: 188-190 Janino compiles per warm refresh, against 7-16 at 1000
+  (``gtfs_pipeline`` bench, local[4]). A session without it is only
+  slower, never wrong, so it gets no warning.
 """
 
 from __future__ import annotations
@@ -83,7 +96,9 @@ def get_spark(app_name: str = "transit_data_pipeline_spark") -> SparkSession:
 
     Local parallelism / shuffle partitions come from SPARK_GRAFT_CPUS
     (default 32) so tests and bench share one code path. On a real
-    cluster the caller's session wins — we only set runtime confs.
+    cluster the caller's session wins — we only set runtime confs. An
+    active session keeps its own static confs: without the codegen cache
+    size set here it recompiles more (slower, same results).
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -106,6 +121,10 @@ def get_spark(app_name: str = "transit_data_pipeline_spark") -> SparkSession:
         # work"). Purely driver-side bookkeeping; no effect on plans,
         # results, or the UI-less status store's correctness.
         .config("spark.sql.event.truncate.length", str(EVENT_TRUNCATE_LENGTH))
+        # Compiled codegen classes kept JVM-wide (static conf, default
+        # 100): room for every class of a nightly refresh, so a warm
+        # refresh reuses them instead of recompiling (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
@@ -123,7 +142,9 @@ def configure(spark: SparkSession) -> SparkSession:
     ship this package to Python workers (Pandas-UDF closures reference
     it by module name; executors can't import it otherwise). Warns once
     if the session lacks the bounded ``spark.sql.event.truncate.length``,
-    which it cannot set on a live session."""
+    which it cannot set on a live session. The static codegen cache size
+    cannot be set either; a session without it is only slower, never
+    wrong, so it gets no warning."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
